@@ -79,7 +79,7 @@ HEADLINE_QUERIES = {
 def run(master: str | None = None, sf_dir: str | None = None,
         out_dir: str | None = None) -> dict:
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     master = master or os.environ.get("BENCH_MASTER", f"local[{cpus}]")
     # 32x replication (~160k turns at sf0.1): large enough that build
     # throughput reflects the engine rather than per-job fixed costs,
@@ -298,57 +298,62 @@ def run(master: str | None = None, sf_dir: str | None = None,
             skew_reader._df_map.items(), key=lambda kv: (-kv[1], kv[0])
         )
         head = dfm[0][0]
-        # rare-but-not-degenerate tail: the smallest df still >= 10k, so
-        # the true top-k is tail-dominated and θ clears the flat
-        # head-only bound. A tail with df < k leaves θ at the head level
-        # — honestly unprunable (the adaptive fallback's case), which
-        # would showcase the wrong regime here.
+        # rare-but-not-degenerate tail: the first tail term with
+        # df >= 100 (else the most frequent one), so the true top-k is
+        # tail-dominated and θ clears the flat head-only bound. A tail
+        # with df < k leaves θ at the head level — honestly unprunable
+        # (the adaptive fallback's case), which would showcase the wrong
+        # regime here. An index without tail_ terms skips the row.
         tail_by_df = sorted(
             (df, t) for t, df in skew_reader._df_map.items()
             if t.startswith("tail_")
         )
         rare_tail = next(
-            (t for df, t in tail_by_df if df >= 100), tail_by_df[-1][1]
+            (t for df, t in tail_by_df if df >= 100),
+            tail_by_df[-1][1] if tail_by_df else None,
         )
-        qskew = f"{head} {rare_tail}"
-        exact = skew_reader.search_bm25(qskew, k=10)
-        wand_pdf = skew_reader.wand_topk(qskew, k=10)
-        lossless = (
-            list(exact["doc_id"]) == list(wand_pdf["doc_id"])
-            and list(exact["score"]) == list(wand_pdf["score"])
-        )
-        st = dict(skew_reader.last_wand_stats)
-        skew_samples: list[float] = []
-        bm_samples: list[float] = []
-        for _ in range(int(os.environ.get("BENCH_SERVE_REPS", "20"))):
-            tq = time.time()
-            skew_reader.wand_topk(qskew, k=10)
-            skew_samples.append(time.time() - tq)
-            tq = time.time()
-            skew_reader.search_bm25(qskew, k=10)
-            bm_samples.append(time.time() - tq)
-        skew_samples.sort()
-        bm_samples.sort()
-        wand_p50 = statistics.median(skew_samples)
-        serve_stats["wand_skew"] = {
-            "query_shape": "head + clustered tail term, "
-                           "tail_vocab=1000 stride=256, ts-ordered",
-            "n_turns": skew_reader.count(),
-            "lossless": lossless,
-            "blocks_total": st["blocks_total"],
-            "surviving_blocks": st["surviving_blocks"],
-            "pruned_fraction": round(
-                1.0 - st["surviving_blocks"] / max(1, st["blocks_total"]),
-                4,
-            ),
-            "blocks_read": st["blocks_read"],
-            "fallback": st["fallback"],
-            "wand_p50_ms": round(1000 * wand_p50, 3),
-            "exhaustive_bm25_p50_ms": round(
-                1000 * statistics.median(bm_samples), 3
-            ),
-        }
-        timings["serve_skew_wand_topk"] = round(wand_p50, 4)
+        if rare_tail is None:
+            serve_stats["wand_skew"] = {"skipped": "no tail_ terms"}
+        else:
+            qskew = f"{head} {rare_tail}"
+            exact = skew_reader.search_bm25(qskew, k=10)
+            wand_pdf = skew_reader.wand_topk(qskew, k=10)
+            lossless = (
+                list(exact["doc_id"]) == list(wand_pdf["doc_id"])
+                and list(exact["score"]) == list(wand_pdf["score"])
+            )
+            st = dict(skew_reader.last_wand_stats)
+            skew_samples: list[float] = []
+            bm_samples: list[float] = []
+            for _ in range(int(os.environ.get("BENCH_SERVE_REPS", "20"))):
+                tq = time.time()
+                skew_reader.wand_topk(qskew, k=10)
+                skew_samples.append(time.time() - tq)
+                tq = time.time()
+                skew_reader.search_bm25(qskew, k=10)
+                bm_samples.append(time.time() - tq)
+            skew_samples.sort()
+            bm_samples.sort()
+            wand_p50 = statistics.median(skew_samples)
+            serve_stats["wand_skew"] = {
+                "query_shape": "head + clustered tail term, "
+                               "tail_vocab=1000 stride=256, ts-ordered",
+                "n_turns": skew_reader.count(),
+                "lossless": lossless,
+                "blocks_total": st["blocks_total"],
+                "surviving_blocks": st["surviving_blocks"],
+                "pruned_fraction": round(
+                    1.0 - st["surviving_blocks"] / max(1, st["blocks_total"]),
+                    4,
+                ),
+                "blocks_read": st["blocks_read"],
+                "fallback": st["fallback"],
+                "wand_p50_ms": round(1000 * wand_p50, 3),
+                "exhaustive_bm25_p50_ms": round(
+                    1000 * statistics.median(bm_samples), 3
+                ),
+            }
+            timings["serve_skew_wand_topk"] = round(wand_p50, 4)
         shutil.rmtree(skew_dir, ignore_errors=True)
 
     # batch serving throughput: N queries fused into ONE plan
@@ -686,7 +691,7 @@ def compact_summary(out: dict, detail_file: str | None) -> dict:
                 if isinstance(v, dict)
             }
         ws = sv.get("wand_skew")
-        if ws:
+        if ws and "skipped" not in ws:
             summary["detail"]["wand_skew"] = {
                 "pruned_fraction": ws["pruned_fraction"],
                 "lossless": ws["lossless"],

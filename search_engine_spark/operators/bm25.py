@@ -3,14 +3,15 @@
 
 Pure DataFrame program, fully JVM-side:
 
-- postings filtered to the query terms (partition/row-group pruned: the
-  postings table is range-laid-out and sorted by (term, doc_id))
+- postings filtered to the query terms: ``engine.postings`` decodes the
+  ``blocks`` table, and the term filter reaches its scan (row-group
+  pruned: blocks are range-laid-out and sorted by (term, doc_id))
 - per-term stats (df) joined via an explicit ``broadcast`` — the stats side
   is |query terms| rows
 - Lucene-style idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (always positive)
 - score = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)); dl is
-  denormalized into the postings rows so scoring needs NO join against a
-  per-doc table (norms-with-postings layout)
+  denormalized into the blocks (``dls``) so scoring needs NO join against
+  a per-doc table (norms-with-postings layout)
 - per-doc sum folded in deterministic term order (array_sort + aggregate)
   so results are bit-identical across partition counts / cluster sizes —
   a plain groupBy().sum() on doubles would depend on partial-agg order
@@ -18,8 +19,6 @@ Pure DataFrame program, fully JVM-side:
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -111,10 +110,3 @@ def bm25_topk(
     if allowed is not None:
         per_doc = per_doc.join(allowed, "doc_id", "left_semi")
     return per_doc.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def bm25_score_py(tf: int, df: int, dl: int, n_docs: int, avgdl: float,
-                  k1: float = 1.2, b: float = 0.75) -> float:
-    """Scalar reference for tests / the WAND inner loop."""
-    idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-    return idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))

@@ -2,7 +2,7 @@
 
 The reference grammar is AND + quoted phrases (engine.ts:105-151). This
 adds the two operators every production engine grows next, evaluated
-directly on the ``postings`` table:
+directly on the engine's ``postings`` (decoded from ``blocks``):
 
 - ``-word``  — exclusion (AND NOT)
 - ``word*``  — prefix atom, satisfied by ANY indexed term with that prefix
@@ -12,7 +12,7 @@ Design points for 100 TB:
 - The whole candidate stage is ONE scan + ONE aggregation: required,
   excluded, and prefix atoms all ride a single pushed scan predicate
   (``In(term, ...) OR StringStartsWith(term, ...)`` — both parquet-pushable,
-  and the postings layout is range-partitioned + sorted by term, so a
+  and the blocks layout is range-partitioned + sorted by term, so a
   prefix is a contiguous slice, not a full scan). Exclusions are a
   conditional count in the same groupBy — no separate anti-join pass; the
   NOT term's posting list costs the same as a positive term's.

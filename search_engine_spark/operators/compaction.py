@@ -14,13 +14,15 @@ hash, memory-storage.ts; this is the part Spark adds at scale).
 ``compact_index`` rewrites ALL current segments of every index table
 into one fresh, globally range-laid segment:
 
-- ``postings`` / ``term_positions``: one ``repartitionByRange(term,
-  doc_id)`` + sort each — the same layout contract the builder uses, so
-  the read side (SearchEngine, WAND) works unchanged; a Zipf head term
+- ``term_positions``: one ``repartitionByRange(term, doc_id)`` + sort —
+  the same layout contract the builder uses, so the read side
+  (SearchEngine, WAND, the serve tier) works unchanged; a Zipf head term
   again splits across range partitions instead of hot-spotting one.
-- ``blocks``: re-cut from the compacted postings, so every term's
-  postings collapse back into maximal ``block_size`` runs with tight
-  block-max bounds (this is where WAND gets its pruning power back).
+- ``blocks`` (the one posting store): decoded, re-laid on (term,
+  doc_id) the same way and re-cut, so every term's postings collapse
+  back into maximal ``block_size`` runs with tight block-max bounds
+  baked at the new avgdl (this is where WAND gets its pruning power
+  back).
 - ``docs``: re-laid by ``doc_id`` so candidate-id IN-scans prune to
   contiguous row groups.
 - ``term_stats``: recomputed from the new blocks (df/max_tf are
@@ -57,10 +59,16 @@ from pyspark.sql import functions as F
 from .. import fsio
 from ..config import EngineConfig
 from .deletes import TOMBSTONES
-from .index_build import _append_manifest, build_blocks, read_manifest
+from .index_build import (
+    _append_manifest,
+    build_blocks,
+    decode_blocks,
+    read_manifest,
+    write_term_stats,
+)
 
 STAGING = "_compact_staging"
-TABLES = ("docs", "term_positions", "postings", "blocks")
+TABLES = ("docs", "term_positions", "blocks")
 
 
 @dataclass
@@ -149,45 +157,28 @@ def _stage(
         .parquet(os.path.join(staging, "term_positions"))
     )
 
-    postings = masked(
-        spark.read.parquet(os.path.join(index_dir, "postings")).drop("seg")
-    )
-    laid = (
-        postings.repartitionByRange(npart, "term", "doc_id")
-        .sortWithinPartitions("term", "doc_id")
-        .persist()  # one range shuffle feeds both the write and the cutter
-    )
+    # postings decoded from the live blocks, deletes applied, re-laid
+    # and re-cut with block maxima at the avgdl the post-swap scorer
+    # will read — the freshly recomputed one (WAND bound validity)
     obs = Observation("compact_postings")
-    (
-        laid.observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite").option("compression", codec)
-        .parquet(os.path.join(staging, "postings"))
-    )
-    # block maxima must use the avgdl the post-swap scorer will read —
-    # the freshly recomputed one (WAND bound validity)
     build_blocks(
-        laid,
+        masked(
+            decode_blocks(
+                spark.read.parquet(os.path.join(index_dir, "blocks"))
+            )
+        )
+        .repartitionByRange(npart, "term", "doc_id")
+        .sortWithinPartitions("term", "doc_id")
+        .observe(obs, F.count(F.lit(1)).alias("n")),
         os.path.join(staging, "blocks"),
         corpus_stats["avgdl"],
         config,
-        npart,
-        presorted=True,
     )
-    laid.unpersist()
-
-    # term_stats from the NEW blocks — identical values to the live table
-    # (df/max_tf are re-blocking invariants) but kept single-sourced
-    blocks = spark.read.parquet(os.path.join(staging, "blocks"))
-    (
-        blocks.groupBy("term")
-        .agg(
-            F.sum("n").cast("long").alias("df"),
-            F.max(F.array_max("tfs")).alias("max_tf"),
-        )
-        .repartitionByRange(max(npart // 4, 1), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite").option("compression", codec)
-        .parquet(os.path.join(staging, "term_stats"))
+    write_term_stats(
+        spark.read.parquet(os.path.join(staging, "blocks")),
+        os.path.join(staging, "term_stats"),
+        npart,
+        config,
     )
     return int(obs.get["n"])
 
@@ -242,7 +233,7 @@ def compact_if_needed(
         f.startswith("part-") for f in fsio.list_dir(tdir)
     )
     if (
-        len(_segments(index_dir, "postings")) <= max_segments
+        len(_segments(index_dir, "blocks")) <= max_segments
         and not fsio.exists(staging_marker)
         and not pending_tombstones
     ):
@@ -285,7 +276,7 @@ def compact_index(
         )
         # single segment AND nothing to delete -> true no-op; pending
         # tombstones force a rewrite even of a single-segment index
-        if len(replaces["postings"]) <= 1 and not tomb_files:
+        if len(replaces["blocks"]) <= 1 and not tomb_files:
             return CompactResult(
                 index_dir=index_dir, label=None, replaced=[],
                 n_postings=0, bytes_before=0, bytes_after=0,
@@ -335,7 +326,7 @@ def compact_index(
         "stage": "compact",
         "segment": marker["label"],
         "ok": True,
-        "replaces": marker["replaces"]["postings"],
+        "replaces": marker["replaces"]["blocks"],
         "n_tombstone_files_applied": len(marker.get("tombstone_files", [])),
         "max_doc_id": marker.get("max_doc_id", 0),
         "n_postings": marker["n_postings"],
@@ -347,7 +338,7 @@ def compact_index(
     return CompactResult(
         index_dir=index_dir,
         label=marker["label"],
-        replaced=marker["replaces"]["postings"],
+        replaced=marker["replaces"]["blocks"],
         n_postings=marker["n_postings"],
         bytes_before=marker["bytes_before"],
         bytes_after=bytes_after,

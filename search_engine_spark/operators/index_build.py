@@ -1,6 +1,7 @@
-"""Inverted-index build: corpus -> docs / term_positions / postings /
-blocks / stats, resumable from per-segment checkpoints with lineage +
-metrics.
+"""Inverted-index build: corpus -> docs / term_positions / blocks /
+stats, resumable from per-segment checkpoints with lineage + metrics.
+``blocks`` is the one posting store; its two decoders (Spark, numpy) at
+the end of this module serve every query path.
 
 Reference behavior being re-expressed (not ported):
 
@@ -23,15 +24,17 @@ Spark shape (one declarative plan per stage, Catalyst optimizes):
            docs filter(seg=k)   (partition-pruned scan)
            -> posexplode -> groupBy(doc_id, term)
            -> ONE range shuffle on (term, doc_id), cached
-           -> term_positions/seg=k ∥ postings/seg=k (term, doc_id, tf, dl)
-           -> delta-encoded block-max blocks/seg=k (mapInPandas over the
+           -> term_positions/seg=k
+           -> non-stop (term, doc_id, tf, dl) postings cut into
+              delta-encoded block-max blocks/seg=k (mapInPandas over the
               sorted partition runs — Lucene-style log-structured segments)
     finalize: term_stats (df, max_tf per term) aggregated from the block
-           summaries (~block_size x smaller than postings); corpus_stats
-           (N, avgdl) observed during the docs write
+           summaries (~block_size x fewer rows than postings);
+           corpus_stats (N, avgdl) observed during the docs write
 
-A scheduled global re-merge of accumulated segments (the Lucene
-"force-merge" analogue) lives in streaming/incremental.py:refresh_stats.
+The global merge of accumulated segments (the Lucene "force-merge"
+analogue) is operators/compaction.py; streaming/incremental.py's
+refresh_stats only recomputes the corpus and term statistics.
 
 Skew note: postings are laid out with ``repartitionByRange(term, doc_id)``,
 which SPLITS a Zipf head term across partitions (unlike hash partitioning,
@@ -52,7 +55,9 @@ import time
 from dataclasses import dataclass
 from typing import Iterator, Optional, Sequence
 
+import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -274,7 +279,6 @@ def build_index(
             ("docs/seg=0", "doc_id long, url string, title string, "
                            "words array<string>, n_tokens int"),
             ("term_positions/seg=0", "doc_id long, term string, positions array<int>"),
-            ("postings/seg=0", "term string, doc_id long, tf int, dl long"),
             ("blocks/seg=0", "term string, first_doc long, max_doc long, n int, "
                              "doc_deltas array<long>, tfs array<int>, "
                              "dls array<long>, block_max_partial double, "
@@ -291,7 +295,7 @@ def build_index(
 
     docs_all = spark.read.parquet(docs_dir)
 
-    # ---- stage 1: per-segment positions + postings + blocks --------------
+    # ---- stage 1: per-segment positions + blocks -------------------------
     done = _completed(manifest, "segment")
     span = (max_id - min_id + 1) if n_docs else 1
     for k in range(segments):
@@ -320,7 +324,7 @@ def build_index(
             )
         )
         # one range shuffle per segment, cached post-shuffle: both table
-        # writes (term_positions, postings) scan the same sorted layout —
+        # writes (term_positions, blocks) scan the same sorted layout —
         # previously each write carried its own sample pass + shuffle,
         # pure serial overhead that capped scaling efficiency
         term_pos = term_pos.persist()  # feeds the range sampler + shuffle
@@ -337,46 +341,27 @@ def build_index(
         )
         term_pos.unpersist()
 
-        # global inverted index (stop words EXCLUDED, engine.ts:68-77);
-        # tf = positions count; dl denormalized for join-free BM25 scoring.
-        # Row count observed during the write — no separate count job.
+        # global inverted index (stop words EXCLUDED, engine.ts:68-77),
+        # tf = positions count, dl denormalized for join-free BM25, cut
+        # into blocks from this segment's sorted layout — no global
+        # re-shuffle (a term in s segments has >= s blocks; WAND treats
+        # blocks independently). Posting count observed on the way in.
         obs = Observation(f"postings_seg_{k}")
-        postings = laid.filter(
-            stop_word_filter(F.col("term"), config.stop_words)
-        ).select(
-            "term",
-            "doc_id",
-            F.size("positions").alias("tf"),
-            "dl",
-        ).observe(obs, F.count(F.lit(1)).alias("n"))
-        postings.write.mode("overwrite").option("compression", config.parquet_codec).parquet(
-            os.path.join(index_dir, "postings", f"seg={k}")
-        )
-
-        # delta-encoded block-max blocks, cut from this segment's already
-        # sorted layout (Lucene-style log-structured segments): no global
-        # re-shuffle of all postings at the end of the build. A term that
-        # appears in s segments just has >= s blocks — WAND treats blocks
-        # independently, so this only adds a few short blocks per term.
+        blocks_dir = os.path.join(index_dir, "blocks", f"seg={k}")
         build_blocks(
             laid.filter(
                 stop_word_filter(F.col("term"), config.stop_words)
             ).select(
                 "term", "doc_id", F.size("positions").alias("tf"), "dl"
-            ),
-            os.path.join(index_dir, "blocks", f"seg={k}"),
+            ).observe(obs, F.count(F.lit(1)).alias("n")),
+            blocks_dir,
             corpus_stats["avgdl"],
             config,
-            npart,
-            presorted=True,
         )
         laid.unpersist()
 
         n_seg_postings = int(obs.get["n"])
         seg_seconds = time.time() - t_seg
-        seg_bytes = fsio.dir_bytes(
-            os.path.join(index_dir, "postings", f"seg={k}")
-        )
         _append_manifest(
             index_dir,
             {
@@ -386,7 +371,7 @@ def build_index(
                 "doc_id_range": [lo, hi],
                 "n_postings": n_seg_postings,
                 "postings_per_sec": round(n_seg_postings / max(seg_seconds, 1e-9), 1),
-                "bytes": seg_bytes,
+                "bytes": fsio.dir_bytes(blocks_dir),
                 "seconds": round(seg_seconds, 3),
             },
         )
@@ -397,22 +382,11 @@ def build_index(
     # ---- stage 2: term stats from the block summaries --------------------
     if "merged" not in {e["stage"] for e in manifest if e.get("ok")}:
         t_merge = time.time()
-        # df per term = sum of block sizes; max_tf = max over block tf
-        # arrays. The blocks table is ~block_size x smaller than postings,
-        # so this replaces a full-postings shuffle with a cheap one; the
-        # algebraic agg's map-side combine absorbs Zipf skew.
-        blocks_all = spark.read.parquet(os.path.join(index_dir, "blocks"))
-        (
-            blocks_all.groupBy("term")
-            .agg(
-                F.sum("n").cast("long").alias("df"),
-                F.max(F.array_max("tfs")).alias("max_tf"),
-            )
-            .repartitionByRange(max(npart // 4, 1), "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .option("compression", config.parquet_codec)
-            .parquet(os.path.join(index_dir, "term_stats"))
+        write_term_stats(
+            spark.read.parquet(os.path.join(index_dir, "blocks")),
+            os.path.join(index_dir, "term_stats"),
+            npart,
+            config,
         )
         _append_manifest(
             index_dir,
@@ -438,10 +412,10 @@ def build_blocks(
     out_dir: str,
     avgdl: float,
     config: EngineConfig,
-    num_partitions: int,
-    presorted: bool = False,
 ) -> None:
     """Cut postings into delta-encoded, block-max-annotated blocks.
+    ``postings`` (term, doc_id, tf, dl) must already be range-partitioned
+    and sorted on (term, doc_id).
 
     Layout: one row per (term, first_doc) block —
       term, first_doc, max_doc, n, doc_deltas:array<long>, tfs:array<int>,
@@ -449,24 +423,21 @@ def build_blocks(
     where ``block_max_partial = max(tf / (tf + k1*(1-b+b*dl/avgdl)))`` so a
     query-time upper bound is ``idf * (k1+1) * block_max_partial`` (idf is
     corpus-global, known at query time). ``dls`` carries the raw per-posting
-    doc lengths (not a baked partial) so exact rescoring from blocks alone
-    — the serving tier's cold-mode WAND — stays correct when ``avgdl``
-    moves under incremental ingest: the score is recomputed against the
-    CURRENT corpus stats at read time, identical to the postings-table
-    path.
+    doc lengths, so a decoded block is the whole posting and every score
+    is computed against the CURRENT corpus stats at read time.
 
     ``bake_avgdl`` records the avgdl this call baked the partials with.
-    The partial is monotonically INCREASING in avgdl, so if the scorer's
-    corpus avgdl later exceeds the baked one (stats refreshed ahead of a
-    block re-bake — e.g. a crash between refresh_stats' corpus_stats
-    write and its build_blocks, or any stats/blocks snapshot skew), the
-    baked bound under-estimates true contributions and block pruning
-    would silently drop top-k docs. Both WAND paths therefore scale the
-    bound by ``max(1, avgdl_now / bake_avgdl)``, which restores a valid
+    The partial is monotonically INCREASING in avgdl, so once the
+    scorer's avgdl exceeds the baked one (``refresh_stats`` moves it
+    after an append without re-cutting blocks), the baked bound
+    under-estimates true contributions and pruning would silently drop
+    top-k docs. Both WAND paths therefore scale the bound by
+    ``max(1, avgdl_now / bake_avgdl)``, which restores a valid
     upper bound for ANY drift direction: for avgdl_now ≥ bake,
     f(avgdl_now) ≤ f(bake) · avgdl_now/bake (the denominator satisfies
     D_now ≥ (bake/avgdl_now)·D_bake because (1-r)(tf + k1(1-b)) ≥ 0);
-    for avgdl_now ≤ bake, f(avgdl_now) ≤ f(bake) directly.
+    for avgdl_now ≤ bake, f(avgdl_now) ≤ f(bake) directly. Compaction
+    re-bakes every block with the then-current avgdl.
 
     Blocks are cut per partition-local (term, doc_id)-sorted run via
     mapInPandas — no per-term groupBy, so head-term skew never concentrates
@@ -476,13 +447,6 @@ def build_blocks(
     """
     k1, b = config.bm25_k1, config.bm25_b
     block = config.block_size
-    if presorted:
-        # caller guarantees a (term, doc_id)-sorted partition layout
-        part = postings
-    else:
-        part = postings.repartitionByRange(
-            num_partitions, "term", "doc_id"
-        ).sortWithinPartitions("term", "doc_id")
 
     schema = (
         "term string, first_doc long, max_doc long, n int, "
@@ -491,8 +455,6 @@ def build_blocks(
     )
 
     def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         carry: Optional[pd.DataFrame] = None
         for pdf in batches:
             if carry is not None:
@@ -509,11 +471,9 @@ def build_blocks(
             if len(head):
                 yield _cut_runs(head, block, k1, b, avgdl, np)
         if carry is not None and len(carry):
-            import numpy as np
-
             yield _cut_runs(carry, block, k1, b, avgdl, np)
 
-    part.mapInPandas(cut, schema=schema).write.mode("overwrite").option("compression", config.parquet_codec).parquet(out_dir)
+    postings.mapInPandas(cut, schema=schema).write.mode("overwrite").option("compression", config.parquet_codec).parquet(out_dir)
 
 
 def _cut_runs(pdf: pd.DataFrame, block: int, k1: float, b: float,
@@ -553,3 +513,71 @@ def _cut_runs(pdf: pd.DataFrame, block: int, k1: float, b: float,
             rows["bake_avgdl"].append(bake)
         start = end
     return pd.DataFrame(rows)
+
+
+def write_term_stats(
+    blocks: DataFrame, out_dir: str, num_partitions: int,
+    config: EngineConfig,
+) -> None:
+    """term_stats (term, df, max_tf) from the block summaries — ~block_size
+    x fewer rows than postings; the algebraic agg's map-side combine
+    absorbs Zipf skew."""
+    (
+        blocks.groupBy("term")
+        .agg(
+            F.sum("n").cast("long").alias("df"),
+            F.max(F.array_max("tfs")).alias("max_tf"),
+        )
+        .repartitionByRange(max(num_partitions // 4, 1), "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .option("compression", config.parquet_codec)
+        .parquet(out_dir)
+    )
+
+
+def decode_blocks(blocks: DataFrame) -> DataFrame:
+    """Spark decoder of the block format: one (term, doc_id, tf, dl) row
+    per posting. Pure SQL: ids = first_doc + a running sum of the deltas
+    (a higher-order ``aggregate``; deltas[0] is 0), then one
+    ``explode(arrays_zip(...))``. A ``term`` filter still reaches the
+    blocks scan; a ``doc_id`` filter cannot, so a one-document lookup
+    adds a ``first_doc``/``max_doc`` predicate on the blocks."""
+    ids = F.aggregate(
+        "doc_deltas",
+        F.struct(F.col("first_doc").alias("last"),
+                 F.array().cast("array<long>").alias("ids")),
+        lambda acc, d: F.struct(
+            (acc["last"] + d).alias("last"),
+            F.concat(acc["ids"], F.array(acc["last"] + d)).alias("ids"),
+        ),
+        lambda acc: acc["ids"],
+    )
+    zipped = F.arrays_zip(ids.alias("doc_id"), F.col("tfs").alias("tf"),
+                          F.col("dls").alias("dl"))
+    return blocks.select("term", F.explode(zipped).alias("p")).select(
+        "term", "p.doc_id", "p.tf", "p.dl"
+    )
+
+
+def decode_block_arrays(tbl) -> tuple:
+    """pyarrow/numpy twin of :func:`decode_blocks`: a blocks table →
+    ``(n, doc_id, tf, dl)``, the per-block posting counts and the
+    per-posting arrays in block order, so callers take terms from the
+    block rows, not one string per posting. ONE ``np.cumsum`` over the
+    flattened deltas, re-based at each block start on ``first_doc`` (an
+    int64 wrap-around in the running sum cancels in the subtraction)."""
+    if tbl["dls"].null_count:
+        raise ValueError("index blocks lack dls (written before the "
+                         "self-contained block format): rebuild it")
+    counts = pc.list_value_length(tbl["doc_deltas"]).to_numpy()
+    counts = counts.astype("int64")
+    run = np.cumsum(pc.list_flatten(tbl["doc_deltas"]).to_numpy())
+    starts = np.cumsum(counts) - counts
+    run += np.repeat(tbl["first_doc"].to_numpy() - run[starts], counts)
+    return (
+        counts,
+        run,
+        pc.list_flatten(tbl["tfs"]).to_numpy(),
+        pc.list_flatten(tbl["dls"]).to_numpy(),
+    )

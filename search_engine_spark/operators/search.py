@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 from .. import fsio
 from ..config import EngineConfig
 from ..functions.tokenizer import is_stop_word, tokenize
+from .index_build import decode_blocks
 from .scoring import make_score_intro_udf
 
 RESULT_SCHEMA = T.StructType(
@@ -100,34 +101,45 @@ class SearchEngine:
 
     def _load_tables(self) -> None:
         """(Re)list the row-level tables and mask pending tombstones
-        (deletes.py). The anti-join is against the broadcast tombstone
-        set — deleted docs vanish from EVERY query path at once (parity
-        search, BM25, batch, and WAND, whose exact-score stage joins
-        ``postings``), while term-level stats (term_stats/blocks, df,
-        avgdl) stay as-built until compaction applies the deletes
-        physically — Lucene's serve-with-deletes contract. Catalyst
-        still pushes per-query term/id filters below the anti-join into
-        the parquet scans (plan-asserted in tests)."""
+        (deletes.py); ``postings`` is decoded from ``blocks``. The
+        anti-join is against the broadcast tombstone set — deleted docs
+        vanish from EVERY query path at once (parity search, BM25, batch,
+        and WAND, whose exact-score stage joins ``postings``), while
+        term-level stats (term_stats/blocks, df, avgdl) stay as-built
+        until compaction applies the deletes physically — Lucene's
+        serve-with-deletes contract. Catalyst still pushes per-query term
+        filters below the anti-join and the decode into the parquet scans
+        (plan-asserted in tests)."""
         from .deletes import read_tombstones
 
         spark, index_dir = self.spark, self.index_dir
         self.docs = spark.read.parquet(os.path.join(index_dir, "docs"))
-        self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+        self._block_scan = spark.read.parquet(
+            os.path.join(index_dir, "blocks")
+        )
         self.term_positions = spark.read.parquet(
             os.path.join(index_dir, "term_positions")
         )
         tomb = read_tombstones(spark, index_dir)
         self._n_tombstones: Optional[int] = None if tomb is not None else 0
         if tomb is not None:
-            mask = F.broadcast(tomb.select("doc_id"))
+            self._mask = F.broadcast(tomb.select("doc_id"))
             self._tombstones = tomb
-            self.docs = self.docs.join(mask, "doc_id", "left_anti")
-            self.postings = self.postings.join(mask, "doc_id", "left_anti")
+            self.docs = self.docs.join(self._mask, "doc_id", "left_anti")
             self.term_positions = self.term_positions.join(
-                mask, "doc_id", "left_anti"
+                self._mask, "doc_id", "left_anti"
             )
         else:
+            self._mask = None
             self._tombstones = None
+        self.postings = self._live_postings(self._block_scan)
+
+    def _live_postings(self, blocks: DataFrame) -> DataFrame:
+        """Decoded postings of ``blocks`` minus the tombstoned docs."""
+        p = decode_blocks(blocks)
+        if self._mask is not None:
+            p = p.join(self._mask, "doc_id", "left_anti")
+        return p
 
     def term_stats(self) -> DataFrame:
         """(term, df, max_tf). Cold engines resolve the parquet listing
@@ -159,8 +171,8 @@ class SearchEngine:
 
         What gets pinned is BOUNDED by design:
 
-        - ``postings`` + ``term_positions`` always — the per-term tables
-          the candidate stage reads, compact delta-friendly columns.
+        - ``postings`` (decoded from ``blocks``) + ``term_positions``
+          always — the per-term tables the candidate stage reads.
         - ``docs`` only when ``pin_docs`` (default), and then only the
           4-column projection the scoring/snippet stage needs — never the
           full table.
@@ -746,8 +758,15 @@ class SearchEngine:
         import math
 
         n_docs = float(self.corpus_stats["n_docs"])
+        # doc_id is decoded, not stored: the block range keeps it pruned
         seed_rows = (
-            self.postings.filter(F.col("doc_id") == doc_id)
+            self._live_postings(
+                self._block_scan.filter(
+                    (F.col("first_doc") <= doc_id)
+                    & (F.col("max_doc") >= doc_id)
+                )
+            )
+            .filter(F.col("doc_id") == doc_id)
             .select("term", "tf")
             .collect()
         )

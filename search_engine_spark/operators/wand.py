@@ -20,8 +20,8 @@ deterministic re-statement of Block-Max WAND (Ding & Suel, SIGIR'11):
    Proof a top-k doc d survives: for t* = argmax contribution c_t(d), the
    block holding d for t* has ub ≥ c_{t*}(d) and the Σ-other bound covers
    the rest, so its bound ≥ score(d) ≥ θ. Pure Column filter, no shuffle.
-4. decode surviving blocks (vectorized Arrow UDF, np.cumsum of deltas) →
-   distinct candidate doc_ids.
+4. decode surviving blocks (``index_build.decode_blocks``: a SQL prefix
+   sum over the deltas, no Python worker) → distinct candidate doc_ids.
 5. exact BM25 on candidates only — same deterministic term-ordered fold as
    bm25.py, so ranks AND scores are bit-identical to the exhaustive path
    (tested), just computed over far fewer docs.
@@ -35,13 +35,11 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from .bm25 import query_terms
+from .index_build import decode_blocks
 
 
 def block_max_eff(blocks: DataFrame, corpus_stats: dict):
@@ -50,10 +48,10 @@ def block_max_eff(blocks: DataFrame, corpus_stats: dict):
 
     The baked partial ``tf/(tf+k1(1-b+b·dl/avgdl_bake))`` is
     monotonically increasing in avgdl, so whenever the scorer's corpus
-    avgdl exceeds the one the block was baked with (stats refreshed
-    ahead of a block re-bake — a crash between refresh_stats' stats
-    write and its build_blocks, or any stats/blocks snapshot skew),
-    the raw baked bound UNDER-estimates true contributions and pruning
+    avgdl exceeds the one the block was baked with (an appended segment
+    is baked at append time and ``refresh_stats`` moves the corpus stats
+    without re-cutting blocks; compaction re-bakes them), the raw baked
+    bound UNDER-estimates true contributions and pruning
     would silently drop top-k docs (repro'd; gated by
     tests/test_wand.py::test_wand_lossless_under_avgdl_drift). The
     correction restores validity for any drift direction: for
@@ -69,25 +67,6 @@ def block_max_eff(blocks: DataFrame, corpus_stats: dict):
     return F.col("block_max_partial") * F.greatest(
         F.lit(1.0), F.lit(avgdl_now) / F.col("bake_avgdl")
     )
-
-
-def decode_doc_ids_udf():
-    """Arrow UDF: (first_doc, doc_deltas) -> array of absolute doc_ids.
-
-    deltas[0] is always 0 (first_doc carried separately, index_build.py),
-    so ids = first_doc + cumsum(deltas). Vectorized per Arrow batch.
-    """
-    import numpy as np
-
-    @pandas_udf("array<long>")
-    def decode(first_doc: pd.Series, deltas: pd.Series) -> pd.Series:
-        out = []
-        for fd, ds in zip(first_doc.to_numpy(), deltas):
-            arr = np.asarray(ds, dtype="int64")
-            out.append((fd + np.cumsum(arr)).tolist())
-        return pd.Series(out)
-
-    return decode
 
 
 def _exact_scores(engine, terms: list[str], candidates: DataFrame,
@@ -180,7 +159,7 @@ def _prepare(engine, text: str):
 
 
 def _theta_schedule(engine, present, blocks, stats, df_map, n, k, *,
-                    seed_blocks, theta_rounds, conjunctive, decode,
+                    seed_blocks, theta_rounds, conjunctive,
                     allowed=None, diag=None):
     """Iteratively tightened pruning thresholds, one per round —
     INCREMENTAL: round r decodes each term's blocks ranked
@@ -225,10 +204,10 @@ def _theta_schedule(engine, present, blocks, stats, df_map, n, k, *,
     for rnd in range(max(1, theta_rounds)):
         lo, hi = rnd * seed_blocks, (rnd + 1) * seed_blocks
         ids_df = (
-            ranked.filter((F.col("rn") > lo) & (F.col("rn") <= hi))
-            .select(
-                F.explode(decode("first_doc", "doc_deltas")).alias("doc_id")
+            decode_blocks(
+                ranked.filter((F.col("rn") > lo) & (F.col("rn") <= hi))
             )
+            .select("doc_id")
             .distinct()
         )
         if allowed is not None:
@@ -443,12 +422,11 @@ def wand_topk(engine, text: str, k: int = 10, seed_blocks: int = 2,
     present, blocks, stats, df_map, term_max, term_min, term_cnt = prep
     k1 = engine.config.bm25_k1
     n = float(engine.corpus_stats["n_docs"])
-    decode = decode_doc_ids_udf()
 
     thetas = _theta_schedule(
         engine, present, blocks, stats, df_map, n, k,
         seed_blocks=seed_blocks, theta_rounds=theta_rounds,
-        conjunctive=conjunctive, decode=decode, allowed=allowed,
+        conjunctive=conjunctive, allowed=allowed,
     )
     theta = thetas[-1]
 
@@ -461,14 +439,18 @@ def wand_topk(engine, text: str, k: int = 10, seed_blocks: int = 2,
     # weakest global bound, and only when THAT keeps everything do we
     # pay one metadata-only count to ask whether the range-aware bound
     # still prunes (it usually carries multi-term pruning).
+    # a partially warmed engine may lack the per-term min/count maps:
+    # then the check cannot run and WAND prunes as it would without it
     fallback = theta <= 0.0
-    if not fallback and _min_global_bound(
+    if not fallback and all(
+        t in term_min and t in term_cnt for t in present
+    ) and _min_global_bound(
         present, df_map, term_min, term_max, n, k1
     ) >= theta_guard(theta):
         if not range_aware or len(present) == 1:
             fallback = True
         else:
-            total = sum(term_cnt.get(t, 0) for t in present)
+            total = sum(term_cnt[t] for t in present)
             surv_cnt = _range_refine(
                 blocks, blocks, present, df_map, n, k1, theta
             ).count()
@@ -488,9 +470,7 @@ def wand_topk(engine, text: str, k: int = 10, seed_blocks: int = 2,
         survivors = _range_refine(
             blocks, survivors, present, df_map, n, k1, theta
         )
-    cand = survivors.select(
-        F.explode(decode("first_doc", "doc_deltas")).alias("doc_id")
-    ).distinct()
+    cand = decode_blocks(survivors).select("doc_id").distinct()
     if allowed is not None:
         cand = cand.join(allowed, "doc_id", "left_semi")
     scored = _exact_scores(engine, present, cand, stats)
@@ -521,12 +501,11 @@ def wand_prune_stats(engine, text: str, k: int = 10, seed_blocks: int = 2,
     blocks = blocks.persist()
     k1 = engine.config.bm25_k1
     n = float(engine.corpus_stats["n_docs"])
-    decode = decode_doc_ids_udf()
     diag: list[dict] = []
     thetas = _theta_schedule(
         engine, present, blocks, stats, df_map, n, k,
         seed_blocks=seed_blocks, theta_rounds=theta_rounds,
-        conjunctive=conjunctive, decode=decode, diag=diag,
+        conjunctive=conjunctive, diag=diag,
     )
     total = blocks.count()
     rounds = []

@@ -1,15 +1,15 @@
 """Term-range-sharded serving fleet over ONE Spark-built index.
 
 This is SCALE.md §3's 100 TB serving story made executable: the build
-lays ``postings`` out range-partitioned and sorted on (term, doc_id),
-so a fleet shards the posting FILES by contiguous term range — each
-node opens (and, warm, pins) only its sliver — while ``docs``,
-``term_positions``, ``term_stats`` and the corpus stats stay on shared
-storage behind every node's bounded caches. A coordinator answers a
-query by pulling the query terms' posting slivers from the owning
-shards (df-bounded traffic — the classic term-partitioned IR exchange,
-never corpus-bounded), merging them per term, and running the SAME
-fold/candidate code a single node runs. Results are therefore
+lays ``blocks`` (the one posting store) out range-partitioned and sorted
+on (term, doc_id), so a fleet shards the blocks FILES by contiguous term
+range — each node opens (and, warm, pins) only its sliver — while
+``docs``, ``term_positions``, ``term_stats`` and the corpus stats stay
+on shared storage behind every node's bounded caches. A coordinator
+answers a query by pulling the query terms' posting slivers from the
+owning shards (df-bounded traffic — the classic term-partitioned IR
+exchange, never corpus-bounded), merging them per term, and running the
+SAME fold/candidate code a single node runs. Results are therefore
 bit-identical to a single reader over the whole index for every query
 shape — pytest-gated in tests/test_serve_fleet.py, including a term
 whose postings straddle the shard boundary and metadata-filtered
@@ -17,10 +17,11 @@ queries.
 
 ``make_term_shards`` materializes shard VIEWS of an existing index as
 symlink directories (the sandbox stand-in for "each node mounts its
-term-range's files from object storage"): postings files are assigned
-to contiguous term-range groups by their parquet row-group statistics;
-everything else is shared. No index bytes are copied or rewritten —
-the same files serve both the single reader and the fleet.
+term-range's files from object storage"): blocks files are split evenly
+into contiguous term-range groups by their parquet row-group
+statistics; everything else is shared. No index bytes are copied or
+rewritten — the same files serve both the single reader and the fleet.
+The views freeze the blocks file list: a changed index needs new views.
 """
 
 from __future__ import annotations
@@ -45,19 +46,18 @@ from .local import (
 # positions are doc-addressed (fetch-after-slice / phrase checks only),
 # term_stats + corpus stats are corpus-GLOBAL scoring inputs — sharding
 # narrows which postings a node holds, never what the corpus looks like
-SHARED_DIRS = ("docs", "term_positions", "term_stats", "blocks",
-               "tombstones")
+SHARED_DIRS = ("docs", "term_positions", "term_stats", "tombstones")
 SHARED_FILES = ("corpus_stats.json", "manifest.jsonl")
 
 
-def _postings_file_ranges(index_dir: str) -> list[tuple[str, str, Path]]:
-    """(min_term, max_term, path) per postings part file, from parquet
+def _blocks_file_ranges(index_dir: str) -> list[tuple[str, str, Path]]:
+    """(min_term, max_term, path) per blocks part file, from parquet
     row-group statistics (no data read); falls back to a term-column
     scan for files without stats."""
     import pyarrow.parquet as pq
 
     out = []
-    root = Path(index_dir) / "postings"
+    root = Path(index_dir) / "blocks"
     for f in sorted(root.rglob("*.parquet")):
         md = pq.read_metadata(f)
         mins: list[str] = []
@@ -92,22 +92,22 @@ def make_term_shards(
     index_dir: str, dest_dir: str, n_shards: int = 2
 ) -> list[str]:
     """Materialize ``n_shards`` term-range shard views of ``index_dir``
-    under ``dest_dir`` (symlinks only — no bytes copied). Files sort by
-    their term range and split into contiguous groups, so each shard
-    owns a term interval; a term whose postings span a group boundary
-    is SPLIT across shards (each posting row lives in exactly one shard
-    — the property the fleet merge relies on). Returns the shard dirs
-    in term-range order (the order ``FleetReader`` must be given)."""
-    ranges = _postings_file_ranges(index_dir)
+    under ``dest_dir`` (symlinks only — no bytes copied). Blocks files
+    sort by their term range and split evenly into contiguous groups, so
+    each shard owns a term interval; a term whose postings span a group
+    boundary is SPLIT across shards (each posting row lives in exactly
+    one shard — the property the fleet merge relies on). Returns the
+    shard dirs in term-range order (the order ``FleetReader`` needs)."""
+    ranges = _blocks_file_ranges(index_dir)
     if len(ranges) < n_shards:
         raise ValueError(
-            f"index has {len(ranges)} postings files < {n_shards} shards"
+            f"index has {len(ranges)} blocks files < {n_shards} shards"
         )
     root = Path(index_dir).resolve()
-    per = -(-len(ranges) // n_shards)  # ceil
     shard_dirs: list[str] = []
     for si in range(n_shards):
-        group = ranges[si * per:(si + 1) * per]
+        n = len(ranges)
+        group = ranges[si * n // n_shards:(si + 1) * n // n_shards]
         sd = Path(dest_dir) / f"shard{si}"
         sd.mkdir(parents=True, exist_ok=True)
         for name in SHARED_DIRS:
@@ -119,8 +119,8 @@ def make_term_shards(
             if src.exists() and not (sd / name).exists():
                 os.symlink(src, sd / name)
         for _, _, f in group:
-            rel = f.resolve().relative_to(root / "postings")
-            tgt = sd / "postings" / rel
+            rel = f.resolve().relative_to(root / "blocks")
+            tgt = sd / "blocks" / rel
             tgt.parent.mkdir(parents=True, exist_ok=True)
             if not tgt.exists():
                 os.symlink(f, tgt)

@@ -12,14 +12,15 @@ serving node that pins its shard of the posting lists and reads
 everything else from pruned parquet scans. This class is that node.
 
 100 TB story. The build already lays the tables out for sharded serving:
-``postings``/``term_positions`` are range-partitioned and SORTED on
-(term, doc_id), ``docs`` on doc_id, all under plain parquet files on a
-Hadoop-compatible FS. A serving fleet therefore shards by term range
-(each node opens only its term-range's files — this class accepts any
-subset of the table's files via the directory it is pointed at) and
-fetches documents by doc-id from row-group-pruned reads against object
-storage. What a node PINS is the postings sliver only — (term, doc_id,
-tf, dl), a few bytes per posting — never the corpus; document bodies and
+``blocks`` (the one posting store, delta-coded) and ``term_positions``
+are range-partitioned and SORTED on (term, doc_id), ``docs`` on doc_id,
+all under plain parquet files on a Hadoop-compatible FS. A serving fleet
+therefore shards by term range (each node opens only its term-range's
+blocks files — this class accepts any subset of the table's files via
+the directory it is pointed at) and fetches documents by doc-id from
+row-group-pruned reads against object storage. What a node PINS is its
+postings sliver only — (term, doc_id, tf, dl) decoded from its blocks,
+a few bytes per posting — never the corpus; document bodies and
 positional lists stay on storage behind bounded caches. One node serving
 the whole bench-scale index here is the degenerate (single-shard) case
 of that fleet, exactly like the reference's single process.
@@ -58,6 +59,7 @@ import pyarrow.dataset as ds
 
 from ..config import EngineConfig
 from ..functions.tokenizer import is_stop_word, tokenize
+from ..operators.index_build import decode_block_arrays
 from ..operators.scoring import score_page
 from ..operators.search import INTERSECT_CAP, _quote_pairs
 from ..operators.snippets import construct_introduction
@@ -132,13 +134,12 @@ def _intersect_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return a[b[idx] == a]
 
 
-def _group_runs(tbl: pa.Table) -> tuple[dict, np.ndarray, list[np.ndarray]]:
-    """(term → (start, end)) run offsets over a (term, …)-sorted table,
-    plus the remaining columns as numpy/list views. Vectorized via
-    dictionary codes — no Python loop over rows."""
+def _group_runs(tbl: pa.Table) -> dict:
+    """(term → (start, end)) run offsets over a (term, …)-sorted table.
+    Vectorized via dictionary codes — no Python loop over rows."""
     n = tbl.num_rows
     if n == 0:
-        return {}, np.empty(0, dtype="int64"), []
+        return {}
     enc = pc.dictionary_encode(tbl["term"])
     chunk = (
         enc.combine_chunks() if isinstance(enc, pa.ChunkedArray) else enc
@@ -150,21 +151,20 @@ def _group_runs(tbl: pa.Table) -> tuple[dict, np.ndarray, list[np.ndarray]]:
     bounds = np.flatnonzero(np.diff(codes)) + 1
     starts = np.concatenate([[0], bounds])
     ends = np.concatenate([bounds, [n]])
-    runs = {
+    return {
         vocab[codes[s]]: (int(s), int(e)) for s, e in zip(starts, ends)
     }
-    return runs, codes, []
 
 
 class LocalIndexReader:
     """Single-node (single-shard) serving reader over an index built by
     :func:`..operators.index_build.build_index`.
 
-    ``pin_postings`` (default True): load + sort the shard's
-    (term, doc_id, tf, dl) columns into process memory at open — the
-    reference's resident-index shape. With False, every query reads its
-    term sliver through a pyarrow dataset filter (parquet row-group
-    stats on the sorted ``term`` column prune the read) — the
+    ``pin_postings`` (default True): decode the shard's blocks into
+    (term, doc_id, tf, dl) arrays in process memory at open — the
+    reference's resident-index shape. With False, every query decodes
+    its term sliver's blocks through a pyarrow dataset filter (parquet
+    row-group stats on the sorted ``term`` column prune the read) — the
     beyond-node-RAM mode; results identical (tested).
 
     ``pin_docs`` (default False): additionally pin the
@@ -202,10 +202,6 @@ class LocalIndexReader:
         )
         self._tp_ds = ds.dataset(
             os.path.join(index_dir, "term_positions"),
-            format="parquet", partitioning="hive",
-        )
-        self._post_ds = ds.dataset(
-            os.path.join(index_dir, "postings"),
             format="parquet", partitioning="hive",
         )
         self._blk_ds = ds.dataset(
@@ -262,18 +258,6 @@ class LocalIndexReader:
         t = ds.dataset(tdir, format="parquet").to_table(columns=["doc_id"])
         return np.unique(t["doc_id"].to_numpy(zero_copy_only=False))
 
-    def _mask_tombstones(self, tbl: pa.Table) -> pa.Table:
-        """Serve-with-deletes, same contract as SearchEngine._load_tables:
-        membership drops tombstoned docs immediately; df/avgdl stats stay
-        as built until compaction applies deletes physically."""
-        if len(self._tombstones) == 0 or tbl.num_rows == 0:
-            return tbl
-        return tbl.filter(
-            pc.invert(
-                pc.is_in(tbl["doc_id"], value_set=pa.array(self._tombstones))
-            )
-        )
-
     def _load_term_stats(self) -> dict:
         t = ds.dataset(
             os.path.join(self.index_dir, "term_stats"), format="parquet"
@@ -284,17 +268,44 @@ class LocalIndexReader:
         )
 
     def _pin_postings(self) -> None:
-        tbl = self._post_ds.to_table(
-            columns=["term", "doc_id", "tf", "dl"]
+        self._runs, self._doc_ids, self._tfs, self._dls = (
+            self._decode_postings(None)
         )
-        tbl = self._mask_tombstones(tbl)
-        tbl = tbl.sort_by(
-            [("term", "ascending"), ("doc_id", "ascending")]
-        ).combine_chunks()
-        self._runs, _, _ = _group_runs(tbl)
-        self._doc_ids = tbl["doc_id"].to_numpy(zero_copy_only=False)
-        self._tfs = tbl["tf"].to_numpy(zero_copy_only=False)
-        self._dls = tbl["dl"].to_numpy(zero_copy_only=False)
+
+    def _decode_postings(self, filter) -> tuple:
+        """(term → (start, end) runs, doc_ids, tf, dl) for the blocks
+        matching ``filter``, decoded, tombstone-masked and sorted on
+        (term, doc_id). Ordering the BLOCKS on (term, first_doc) orders
+        the postings: a term's blocks hold disjoint doc-id ranges (one
+        doc lives in one segment, and a segment cuts a term's sorted run
+        in order), so the sort runs over block keys and the postings
+        follow by one gather. Pinned dtypes: int64 ids, int32 tf and dl."""
+        tbl = self._blk_ds.to_table(
+            filter=filter,
+            columns=["term", "first_doc", "doc_deltas", "tfs", "dls"],
+        )
+        counts, ids, tfs, dls = decode_block_arrays(tbl)
+        order = pc.sort_indices(
+            tbl.select(["term", "first_doc"]),
+            sort_keys=[("term", "ascending"), ("first_doc", "ascending")],
+        ).to_numpy()
+        starts = np.cumsum(counts) - counts
+        counts = counts[order]
+        # posting offset of every sorted block start (+ the end)
+        bounds = np.concatenate([[0], np.cumsum(counts)])
+        perm = np.repeat(starts[order] - bounds[:-1], counts)
+        perm += np.arange(len(perm))
+        keep = self._mask_dead(ids[perm])
+        perm = perm[keep]
+        at = np.concatenate([[0], np.cumsum(keep)])[bounds]
+        runs = {
+            t: (int(at[s]), int(at[e]))
+            for t, (s, e) in _group_runs(
+                tbl.select(["term"]).take(order)
+            ).items()
+            if at[e] > at[s]
+        }
+        return runs, ids[perm], tfs[perm], dls[perm].astype("int32")
 
     def _pin_docs(self) -> None:
         t = (
@@ -315,7 +326,7 @@ class LocalIndexReader:
 
     def _term_arrays(self, terms: Sequence[str]) -> dict:
         """term → (doc_ids asc, tf, dl) numpy views for the given terms.
-        Pinned: dict lookup + array slice. Cold: ONE pruned dataset read
+        Pinned: dict lookup + array slice. Cold: ONE pruned blocks read
         for all terms (row-group stats on the sorted term column)."""
         if self._runs is not None:
             out = {}
@@ -328,18 +339,9 @@ class LocalIndexReader:
                     self._doc_ids[s:e], self._tfs[s:e], self._dls[s:e]
                 )
             return out
-        tbl = self._post_ds.to_table(
-            filter=pc.field("term").isin(list(terms)),
-            columns=["term", "doc_id", "tf", "dl"],
+        runs, ids, tfs, dls = self._decode_postings(
+            pc.field("term").isin(list(terms))
         )
-        tbl = self._mask_tombstones(tbl)
-        tbl = tbl.sort_by(
-            [("term", "ascending"), ("doc_id", "ascending")]
-        ).combine_chunks()
-        runs, _, _ = _group_runs(tbl)
-        ids = tbl["doc_id"].to_numpy(zero_copy_only=False)
-        tfs = tbl["tf"].to_numpy(zero_copy_only=False)
-        dls = tbl["dl"].to_numpy(zero_copy_only=False)
         return {
             t: (ids[s:e], tfs[s:e], dls[s:e])
             for t, (s, e) in runs.items()
@@ -359,7 +361,10 @@ class LocalIndexReader:
             filter=pc.field("term") == term,
             columns=["doc_id", "positions"],
         )
-        tbl = self._mask_tombstones(tbl)
+        if len(self._tombstones):
+            tbl = tbl.filter(pa.array(self._mask_dead(
+                tbl["doc_id"].to_numpy()
+            )))
         tbl = tbl.sort_by("doc_id").combine_chunks()
         ids = tbl["doc_id"].to_numpy(zero_copy_only=False)
         plist = tbl["positions"]
@@ -737,10 +742,10 @@ class LocalIndexReader:
         numpy arrays. Decoded blocks live in a bounded LRU (a serving
         node's warm working set); misses are fetched in ONE pruned
         parquet read for all missing blocks (term + first_doc filters
-        hit the row-group stats of the (term, doc_id)-sorted layout);
-        per-block delta decode is a vectorized cumsum, ids within a term
-        are unique across blocks (a doc lives in exactly one build
-        segment)."""
+        hit the row-group stats of the (term, doc_id)-sorted layout) and
+        decoded together (``index_build.decode_block_arrays``); ids
+        within a term are unique across blocks (a doc lives in exactly
+        one segment)."""
         if not keys:
             return {}
         miss = [kk for kk in keys if kk not in self._blk_cache]
@@ -754,33 +759,15 @@ class LocalIndexReader:
                 ),
                 columns=["term", "first_doc", "doc_deltas", "tfs", "dls"],
             )
-            miss_set = set(miss)
-            terms_col = tbl["term"].to_pylist()
-            firsts = tbl["first_doc"].to_numpy(zero_copy_only=False)
-            deltas_col = tbl["doc_deltas"]
-            tfs_col = tbl["tfs"]
-            dls_col = tbl["dls"]
-            for i, (t, fd) in enumerate(zip(terms_col, firsts)):
-                kk = (t, int(fd))
-                if kk not in miss_set:  # isin over-selects cross pairs
-                    continue
-                dls_py = dls_col[i].as_py()
-                if dls_py is None:
-                    # mixed-format index: this fragment predates the
-                    # self-contained (dls-carrying) block format, so the
-                    # schema-level guard in wand_topk couldn't catch it
-                    raise ValueError(
-                        "index blocks segment for term "
-                        f"{t!r} lacks dls values (written before the "
-                        "self-contained block format) — rebuild or "
-                        "compact the index to serve WAND from blocks"
-                    )
-                d = np.asarray(deltas_col[i].as_py(), dtype="int64")
-                self._blk_cache[kk] = (
-                    int(fd) + np.cumsum(d),
-                    np.asarray(tfs_col[i].as_py(), dtype="float64"),
-                    np.asarray(dls_py, dtype="float64"),
-                )
+            counts, ids, tfs, dls = decode_block_arrays(tbl)
+            at = np.concatenate([[0], np.cumsum(counts)])
+            tfs, dls = tfs.astype("float64"), dls.astype("float64")
+            miss_set = set(miss)  # the two isins over-select cross pairs
+            for i, kk in enumerate(zip(tbl["term"].to_pylist(),
+                                       tbl["first_doc"].to_pylist())):
+                if kk in miss_set:
+                    s, e = at[i], at[i + 1]
+                    self._blk_cache[kk] = (ids[s:e], tfs[s:e], dls[s:e])
         out: dict[str, list] = {}
         for kk in sorted(keys):
             hit = self._blk_cache.get(kk)
@@ -897,12 +884,6 @@ class LocalIndexReader:
         surviving / read / candidates / theta) — the bench's evidence
         that pruning holds at serve time.
         """
-        if "dls" not in self._blk_ds.schema.names:
-            raise ValueError(
-                "index blocks lack the dls column (built before the "
-                "self-contained block format) — rebuild or compact the "
-                "index to serve WAND from blocks"
-            )
         words, quotes = tokenize(text)
         terms = sorted({
             w.lower()

@@ -36,7 +36,7 @@ def get_spark(
     app_name: str = "search_engine_spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     master = master or f"local[{cpus}]"
     n_threads = master.removeprefix("local[").removesuffix("]")
     if shuffle_partitions is None:

@@ -4,11 +4,11 @@ The reference is strictly batch (its only "streaming" is incremental XML
 parsing of one local file, /root/reference/src/demo.ts:26-64, with serial
 ``await add(...)`` per doc). The Spark-native generalization: transcript
 turns arrive as files in a directory; ``readStream`` + ``foreachBatch``
-appends each micro-batch as a new index *segment* (Lucene-style), and the
-corpus-global statistics (term_stats / corpus_stats / blocks) are
-refreshed from the accumulated postings after draining — the same
-segments-then-merge design the batch builder uses, so the read side
-(SearchEngine) works unchanged on a streamed index.
+appends each micro-batch as a new index *segment* (Lucene-style) of
+docs, term_positions and blocks; the corpus-global statistics
+(corpus_stats / term_stats) are refreshed after draining, without
+re-cutting blocks — the same segments-then-merge design the batch
+builder uses, so the read side works unchanged on a streamed index.
 
 doc_ids are assigned per batch: ``max existing id + dense row_number over
 (conv_id, turn_idx)`` — deterministic within a batch, monotone across
@@ -17,8 +17,8 @@ demo.ts:139-144).
 
 Scale notes: each micro-batch is a narrow tokenize + two local-shuffle
 group-bys over ONLY the new turns; nothing rescans the existing index.
-``refresh_stats`` is algebraic over postings (map-side combine) plus the
-block cutter's mapInPandas — both skew-safe (see index_build.py).
+``refresh_stats`` is one docs aggregate plus an algebraic groupBy over
+the block summaries (map-side combine, skew-safe — see index_build.py).
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsio
@@ -40,6 +40,7 @@ from ..operators.index_build import (
     build_blocks,
     read_manifest,
     stop_word_filter,
+    write_term_stats,
 )
 
 
@@ -92,10 +93,13 @@ def append_batch(
         "n_tokens", F.size("words")
     )
     docs_seg_dir = os.path.join(index_dir, "docs", f"seg={seg_label}")
+    doc_obs = Observation(f"docs_{seg_label}")
     docs.select(
         "doc_id", "url", "title", "words", "n_tokens",
         *[c for c in ("conv_id", "turn_idx", "ts") if c in corpus.columns],
-    ).write.mode("overwrite").option("compression", config.parquet_codec).parquet(docs_seg_dir)
+    ).observe(doc_obs, F.avg("n_tokens").alias("avgdl")).write.mode(
+        "overwrite"
+    ).option("compression", config.parquet_codec).parquet(docs_seg_dir)
     # docs write is the terminal read through the doc-id cache — release
     # it here, or a long-running stream leaks one cached frame per batch
     seq_cache.unpersist()
@@ -127,12 +131,22 @@ def append_batch(
         .parquet(os.path.join(index_dir, "term_positions", f"seg={seg_label}"))
     )
     term_pos.unpersist()
-    (
+    # bake at the avgdl scored with now (the batch's own on an empty
+    # index); the bake_avgdl correction covers later refreshes
+    stats_path = os.path.join(index_dir, "corpus_stats.json")
+    avgdl = (
+        json.loads(fsio.read_text(stats_path))["avgdl"]
+        if fsio.exists(stats_path) else 0.0
+    ) or float(doc_obs.get["avgdl"] or 0.0)
+    # one blocks file per micro-batch: each file of each segment costs
+    # every cold serve-tier block read one more file open
+    build_blocks(
         laid.filter(stop_word_filter(F.col("term"), config.stop_words))
         .select("term", "doc_id", F.size("positions").alias("tf"), "dl")
-        .write.mode("overwrite")
-        .option("compression", config.parquet_codec)
-        .parquet(os.path.join(index_dir, "postings", f"seg={seg_label}"))
+        .coalesce(1).sortWithinPartitions("term", "doc_id"),
+        os.path.join(index_dir, "blocks", f"seg={seg_label}"),
+        avgdl,
+        config,
     )
     laid.unpersist()
     _append_manifest(
@@ -154,8 +168,9 @@ def refresh_stats(
     config: EngineConfig = EngineConfig(),
     npart: int | None = None,
 ) -> dict:
-    """Recompute corpus_stats / term_stats / blocks from the accumulated
-    segments (the 'merge' a real deployment would run on a schedule)."""
+    """Recompute corpus_stats and term_stats from the accumulated
+    segments (the 'merge' a real deployment would run on a schedule).
+    Blocks are left as written: they already hold every posting."""
     npart = npart or int(spark.conf.get("spark.sql.shuffle.partitions"))
     docs = spark.read.parquet(os.path.join(index_dir, "docs"))
     row = docs.agg(
@@ -165,20 +180,11 @@ def refresh_stats(
     fsio.write_text(
         os.path.join(index_dir, "corpus_stats.json"), json.dumps(stats)
     )
-
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-    (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("df"), F.max("tf").alias("max_tf"))
-        .repartitionByRange(max(npart // 4, 1), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("compression", config.parquet_codec)
-        .parquet(os.path.join(index_dir, "term_stats"))
-    )
-    build_blocks(
-        postings, os.path.join(index_dir, "blocks"), stats["avgdl"], config,
+    write_term_stats(
+        spark.read.parquet(os.path.join(index_dir, "blocks")),
+        os.path.join(index_dir, "term_stats"),
         npart,
+        config,
     )
     _append_manifest(index_dir, {"stage": "stream_refresh", "ok": True, **stats})
     return stats

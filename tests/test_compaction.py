@@ -6,16 +6,28 @@ next run (same redo contract as the build's resume test).
 """
 
 import json
+import os
 
+import numpy as np
 import pytest
 
+from pyspark.sql import functions as F
+
 from search_engine_spark import fsio
-from search_engine_spark.config import DEMO_STOP_WORDS, EngineConfig
+from search_engine_spark.config import (
+    DEMO_STOP_WORDS,
+    EngineConfig,
+    ScoreWeights,
+)
 from search_engine_spark.operators.compaction import (
     _segments,
     compact_index,
 )
-from search_engine_spark.operators.index_build import build_index, read_manifest
+from search_engine_spark.operators.index_build import (
+    build_index,
+    read_manifest,
+    stop_word_filter,
+)
 from search_engine_spark.operators.search import SearchEngine
 from search_engine_spark.operators.wand import wand_topk
 from search_engine_spark.sources.transcripts import (
@@ -76,14 +88,14 @@ def test_compact_preserves_results_and_merges_segments(
     stats_before = sorted(
         tuple(r) for r in engine.term_stats().collect()
     )
-    assert len(_segments(idx, "postings")) == 4
+    assert len(_segments(idx, "blocks")) == 4
 
     res = compact_index(spark, idx, config=cfg)
     assert res.compacted and res.label == "c0"
     assert sorted(res.replaced) == sorted(
         ["seg=0", "seg=1", "seg=2", "seg=stream0"]
     )
-    for table in ("docs", "term_positions", "postings", "blocks"):
+    for table in ("docs", "term_positions", "blocks"):
         assert _segments(idx, table) == ["seg=c0"], table
     assert not fsio.exists(f"{idx}/_compact_staging")
 
@@ -123,14 +135,14 @@ def test_compact_if_needed_policy(spark, tmp_path):
 
     # 3 segments <= threshold 4 -> layout is fine, nothing runs
     assert not compact_if_needed(spark, idx, max_segments=4, config=cfg).compacted
-    assert len(_segments(idx, "postings")) == 3
+    assert len(_segments(idx, "blocks")) == 3
 
     # a pending tombstone is a correctness debt -> runs despite threshold
     victim = SearchEngine(spark, idx, config=cfg).search("window").collect()[0]
     assert delete_docs(spark, idx, urls=[victim["url"]]) == 1
     assert compact_if_needed(spark, idx, max_segments=4, config=cfg).compacted
     assert read_tombstones(spark, idx) is None
-    assert len(_segments(idx, "postings")) == 1
+    assert len(_segments(idx, "blocks")) == 1
 
     # grow past the threshold -> compacts on count alone
     corpus = _corpus(spark)
@@ -141,9 +153,9 @@ def test_compact_if_needed_policy(spark, tmp_path):
     assert append_batch(
         spark, corpus.filter("turn_idx = 5"), idx, "sB", config=cfg
     ) > 0
-    assert len(_segments(idx, "postings")) == 3
+    assert len(_segments(idx, "blocks")) == 3
     assert compact_if_needed(spark, idx, max_segments=2, config=cfg).compacted
-    assert len(_segments(idx, "postings")) == 1
+    assert len(_segments(idx, "blocks")) == 1
 
 
 def test_compact_crash_after_staging_resumes(spark, tmp_path):
@@ -161,11 +173,70 @@ def test_compact_crash_after_staging_resumes(spark, tmp_path):
         fsio.read_text(f"{idx}/_compact_staging/_STAGED.json")
     )
     assert marker["label"] == "c0"
-    assert len(_segments(idx, "postings")) == 3
+    assert len(_segments(idx, "blocks")) == 3
 
     # rerun completes the swap from the marker without restaging
     res = compact_index(spark, idx, config=cfg)
     assert res.compacted and res.label == "c0"
-    assert _segments(idx, "postings") == ["seg=c0"]
+    assert _segments(idx, "blocks") == ["seg=c0"]
     engine2 = SearchEngine(spark, idx, config=cfg)
     assert _snapshot(engine2) == before
+
+
+def test_append_refresh_compact_leaves_one_block_copy(spark, tmp_path):
+    """append_batch -> delete_docs -> refresh_stats -> compact_index
+    (the order stream_build(auto_compact_segments=...) and an ingest
+    loop run) must leave every live posting in exactly one block: the
+    blocks table holds only the compacted segment, the postings its
+    files hold (all of them, as the serve tier reads them) are exactly
+    the non-stop term_positions rows, and serve-tier WAND still equals
+    exhaustive BM25 on a query that prunes. Blocks written outside the
+    segment directories would survive compaction beside seg=c0 and be
+    read twice."""
+    import pyarrow.dataset as pads
+
+    from search_engine_spark.operators.deletes import delete_docs
+    from search_engine_spark.serving import LocalIndexReader
+
+    cfg = EngineConfig(
+        stop_words=DEMO_STOP_WORDS, score_weights=ScoreWeights(),
+        block_size=64,
+    )
+    tx = synthesize_transcripts(
+        spark, f"{SF_DIR}/documents.parquet", replicate=8, tail_vocab=400,
+    )
+    corpus = corpus_from_transcripts(tx)
+    idx = str(tmp_path / "index")
+    build_index(spark, corpus.filter("turn_idx < 6"), idx, config=cfg,
+                segments=2)
+    assert append_batch(
+        spark, corpus.filter("turn_idx >= 6"), idx, "s0", config=cfg
+    ) > 0
+    assert delete_docs(
+        spark, idx, doc_ids=list(range(1, 3000, 7)), config=cfg
+    ) > 0
+    refresh_stats(spark, idx, config=cfg)
+    assert compact_index(spark, idx, config=cfg).compacted
+
+    assert sorted(os.listdir(os.path.join(idx, "blocks"))) == ["seg=c0"]
+    n_blocked = sum(
+        pads.dataset(f"{idx}/blocks", format="parquet",
+                     partitioning="hive").to_table(columns=["n"])["n"]
+        .to_pylist()
+    )
+    n_nonstop = spark.read.parquet(f"{idx}/term_positions").filter(
+        stop_word_filter(F.col("term"), cfg.stop_words)).count()
+    assert n_blocked == n_nonstop
+
+    reader = LocalIndexReader(idx, config=cfg, pin_postings=False)
+    dfm = sorted(reader._df_map.items(), key=lambda kv: (-kv[1], kv[0]))
+    q = f"{dfm[0][0]} {dfm[-1][0]}"
+    want = reader.search_bm25(q, k=10)
+    got = reader.wand_topk(q, k=10)
+    s = reader.last_wand_stats
+    assert s["surviving_blocks"] < s["blocks_total"], s
+    assert list(got["doc_id"]) == list(want["doc_id"])
+    assert np.array_equal(
+        got["score"].to_numpy(dtype="float64"),
+        want["score"].to_numpy(dtype="float64"),
+    )

@@ -66,10 +66,10 @@ def skew_engine(spark, tmp_path_factory):
 
 def test_head_term_splits_across_partitions(spark, skew_engine):
     _, d = skew_engine
-    # the head term's postings span multiple parquet files (range layout
-    # splits it instead of hashing it onto one reducer)
+    # the head term's posting blocks span multiple parquet files (range
+    # layout splits it instead of hashing it onto one reducer)
     files = (
-        spark.read.parquet(f"{d}/postings")
+        spark.read.parquet(f"{d}/blocks")
         .filter(F.col("term") == "ubiquitous")
         .select(F.input_file_name().alias("f"))
         .distinct()

@@ -3,8 +3,8 @@
 Enforces SURVEY.md §7.3 ("no per-row Python"): every query plan may use
 Arrow-vectorized Python (ArrowEvalPython / FlatMapGroupsInPandas /
 MapInPandas) but never row-at-a-time BatchEvalPython, and term/doc filters
-must reach the parquet scans as PushedFilters so a 100 TB postings table
-is pruned at the source.
+must reach the parquet scans as PushedFilters so a 100 TB posting store
+(the ``blocks`` table, decoded in the plan) is pruned at the source.
 """
 
 import pytest
@@ -40,13 +40,23 @@ def assert_no_row_python(plan: str):
     assert "BatchEvalPython" not in plan, plan
 
 
+def assert_blocks_scan_pushed(plan: str):
+    """The term IN-list reaches the blocks (posting store) parquet scan
+    itself — the scan that reads ``doc_deltas`` — through the decode's
+    Generate and any tombstone anti-join."""
+    assert any(
+        "FileScan" in ln and "doc_deltas" in ln and "In(term" in ln
+        for ln in plan.splitlines()
+    ), plan
+
+
 def test_bm25_plan_jvm_side_and_pruned(engine):
     df = engine.search_bm25("filter join window", k=10)
     plan = plan_of(df)
     assert_no_row_python(plan)
-    # term IN (...) reaches the postings parquet scan
+    # term IN (...) reaches the blocks parquet scan
     assert "PushedFilters" in plan
-    assert "In(term" in plan
+    assert_blocks_scan_pushed(plan)
     # the tiny per-term stats side is broadcast, not shuffled
     assert "BroadcastHashJoin" in plan
 
@@ -55,7 +65,7 @@ def test_wand_plan_jvm_side(engine):
     df = engine.search_bm25("filter join window", k=10, use_wand=True)
     plan = plan_of(df)
     assert_no_row_python(plan)
-    assert "In(term" in plan
+    assert_blocks_scan_pushed(plan)
 
 
 def test_filtered_bm25_corpus_lang_pushdown(spark):
@@ -73,7 +83,7 @@ def test_filtered_bm25_corpus_lang_pushdown(spark):
 def test_filtered_bm25_engine_metadata_pushdown(engine):
     """Engine-side where=: the metadata predicate reaches the docs scan
     (cold engine — warmed engines evaluate it on the pinned projection)
-    and the term IN-list still reaches the postings scan."""
+    and the term IN-list still reaches the blocks scan."""
     from pyspark.sql import functions as F
 
     df = engine.search_bm25(
@@ -82,7 +92,7 @@ def test_filtered_bm25_engine_metadata_pushdown(engine):
     )
     plan = plan_of(df)
     assert_no_row_python(plan)
-    assert "In(term" in plan
+    assert_blocks_scan_pushed(plan)
     assert "StringStartsWith(title,assistant:)" in plan
 
 
@@ -137,11 +147,11 @@ def test_corpus_query_plans_jvm_side(spark, name):
 
 
 def test_reference_search_postings_pushdown(engine):
-    """The parity path's term IN-list must reach the postings scan —
+    """The parity path's term IN-list must reach the blocks scan —
     re-lowercasing the already-lowercase term column would disable it."""
     df = engine.candidates(["window", "merge"], [], ["window", "merge"])
     plan = plan_of(df)
-    assert "In(term" in plan
+    assert_blocks_scan_pushed(plan)
     assert "lower(" not in plan
 
 

@@ -194,7 +194,7 @@ def test_daemon_local_tier_fleet(spark, tmp_path):
     """--shards 2 routes the local tier through a term-range fleet
     (serving/fleet.py) — the serving protocol is shard-count-
     transparent: identical hits to the single-reader local tier, for
-    parity search AND bm25. Needs an index with >=2 postings files, so
+    parity search AND bm25. Needs an index with >=2 blocks files, so
     it builds its own corpus instead of the 2-doc planets fixture."""
     from search_engine_spark.config import (
         DEMO_STOP_WORDS, EngineConfig, ScoreWeights,
@@ -233,3 +233,20 @@ def test_daemon_local_tier_fleet(spark, tmp_path):
     one = {m["query"]: m["hits"] for m in sb if m["type"] == "result"}
     two = {m["query"]: m["hits"] for m in fb if m["type"] == "result"}
     assert one == two
+
+
+def test_daemon_rejects_refresh_auto_with_shards(planets_index):
+    """Shard views freeze their blocks files when they are made, so a
+    refreshed fleet would serve new stats and tombstones over old
+    postings — a snapshot that never existed. The flag pair is refused
+    before any reader opens."""
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "serve_daemon.py"),
+         str(planets_index), "--tier", "local", "--shards", "2",
+         "--refresh", "auto"],
+        input="", capture_output=True, text=True, timeout=120,
+        cwd=str(REPO),
+    )
+    assert proc.returncode == 2, proc.stderr[-3000:]
+    assert "--refresh auto needs --shards 1" in proc.stderr
+    assert proc.stdout == ""

@@ -1,9 +1,10 @@
 """Term-range-sharded serving fleet (serving/fleet.py): two
-LocalIndexReaders over disjoint subsets of the SAME index's postings
-files, merged by the coordinator, must be bit-identical to one reader
-over the whole index — for parity search (incl. phrases), BM25
-disjunctive/conjunctive, metadata-filtered queries, and specifically
-for a term whose postings straddle the shard boundary."""
+LocalIndexReaders over disjoint subsets of the SAME index's blocks
+files (the posting store), merged by the coordinator, must be
+bit-identical to one reader over the whole index — for parity search
+(incl. phrases), BM25 disjunctive/conjunctive, metadata-filtered
+queries, and specifically for a term whose postings straddle the shard
+boundary."""
 
 import numpy as np
 import pyarrow.dataset as pads
@@ -51,7 +52,7 @@ def fleet_env(spark, tmp_path_factory):
 
 
 def shard_terms(shard_dir: str) -> set:
-    ds = pads.dataset(f"{shard_dir}/postings", format="parquet",
+    ds = pads.dataset(f"{shard_dir}/blocks", format="parquet",
                       partitioning="hive")
     return set(ds.to_table(columns=["term"])["term"].to_pylist())
 
@@ -66,21 +67,54 @@ def straddling_terms(fleet: FleetReader) -> list[str]:
     return sorted(t for t, c in seen.items() if c > 1)
 
 
+def block_counts(index_dir: str) -> tuple[int, int]:
+    """(block rows, postings they hold) of an index or shard view."""
+    t = pads.dataset(f"{index_dir}/blocks", format="parquet",
+                     partitioning="hive").to_table(columns=["n"])
+    return t.num_rows, int(sum(t["n"].to_pylist()))
+
+
 def test_shards_partition_the_postings(fleet_env):
-    """Every posting row lands in exactly one shard; the union is the
-    whole table; at least one term straddles the boundary (the case the
-    merge must re-sort)."""
+    """Every block (and so every posting row) lands in exactly one
+    shard; the union is the whole table; at least one term straddles
+    the boundary (the case the merge must re-sort)."""
     idx, single, fleet2, _ = fleet_env
-    full = pads.dataset(f"{idx}/postings", format="parquet",
-                        partitioning="hive")
-    n_full = full.count_rows()
-    n_shards = sum(
-        pads.dataset(f"{sh.index_dir}/postings", format="parquet",
-                     partitioning="hive").count_rows()
-        for sh in fleet2.shards
-    )
-    assert n_shards == n_full
+    per_shard = [block_counts(sh.index_dir) for sh in fleet2.shards]
+    assert tuple(map(sum, zip(*per_shard))) == block_counts(idx)
     assert straddling_terms(fleet2), "no term straddles the shard split"
+
+
+def test_uneven_file_count_splits_evenly(spark, tmp_path):
+    """4 blocks files over 3 shards: every shard gets at least one file,
+    so every shard opens, and the fleet answers bit-identically to one
+    reader."""
+    idx = str(tmp_path / "idx")
+    tx = synthesize_transcripts(spark, f"{SF_DIR}/documents.parquet")
+    build_index(spark, corpus_from_transcripts(tx), idx, config=CFG,
+                segments=1, shuffle_partitions=4)
+    files = sorted((tmp_path / "idx" / "blocks").rglob("*.parquet"))
+    assert len(files) == 4
+    dirs = make_term_shards(idx, str(tmp_path / "s3"), n_shards=3)
+    sizes = [
+        len(list((tmp_path / "s3" / f"shard{i}" / "blocks").rglob(
+            "*.parquet")))
+        for i in range(3)
+    ]
+    assert sorted(sizes) == [1, 1, 2]
+    fleet = FleetReader(dirs, config=CFG)
+    single = LocalIndexReader(idx, config=CFG)
+    for q in PARITY_QUERIES:
+        assert fleet.search(q, max_count=10).equals(
+            single.search(q, max_count=10)
+        ), q
+    for q in ["filter join window", "table scan", "filter"]:
+        want = single.search_bm25(q, k=10)
+        got = fleet.search_bm25(q, k=10)
+        assert list(got["doc_id"]) == list(want["doc_id"]), q
+        assert np.array_equal(
+            got["score"].to_numpy(dtype="float64"),
+            want["score"].to_numpy(dtype="float64"),
+        ), q
 
 
 PARITY_QUERIES = [

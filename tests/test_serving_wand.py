@@ -120,24 +120,44 @@ def test_wand_tombstones(spark, tmp_path):
 
 
 def test_blocks_carry_dls(carl):
-    """The self-contained block format: dls present and consistent with
-    the postings table's dl for the same (term, doc)."""
+    """The self-contained block format: blocks hold every non-stop
+    posting with its tf and dl, and both decoders (Spark SQL and
+    pyarrow/numpy) give back exactly the postings rebuilt independently
+    from term_positions ⨝ docs.n_tokens, tf = size(positions)."""
+    import pyarrow.dataset as pads
+
+    from search_engine_spark.operators.index_build import (
+        decode_block_arrays, decode_blocks, stop_word_filter,
+    )
+
     engine, idx = carl
     spark = engine.spark
     blk = spark.read.parquet(f"{idx}/blocks")
     assert "dls" in blk.columns
-    from_blocks = blk.select(
-        "term", F.explode(F.arrays_zip("tfs", "dls")).alias("z")
-    ).select(
-        "term",
-        F.col("z.tfs").cast("long").alias("tf"),
-        F.col("z.dls").cast("long").alias("dl"),
+    cols = [F.col("term"), F.col("doc_id").cast("long"),
+            F.col("tf").cast("long"), F.col("dl").cast("long")]
+    from_blocks = decode_blocks(blk).select(*cols)
+    reference = (
+        spark.read.parquet(f"{idx}/term_positions")
+        .filter(stop_word_filter(F.col("term"), CFG.stop_words))
+        .join(spark.read.parquet(f"{idx}/docs")
+              .select("doc_id", F.col("n_tokens").alias("dl")), "doc_id")
+        .select("term", "doc_id", F.size("positions").alias("tf"), "dl")
+        .select(*cols)
     )
-    from_postings = spark.read.parquet(f"{idx}/postings").select(
-        "term", F.col("tf").cast("long"), F.col("dl").cast("long")
+    assert reference.count() > 0
+    assert from_blocks.exceptAll(reference).count() == 0
+    assert reference.exceptAll(from_blocks).count() == 0
+
+    tbl = pads.dataset(f"{idx}/blocks", format="parquet",
+                       partitioning="hive").to_table()
+    counts, ids, tfs, dls = decode_block_arrays(tbl)
+    terms = np.repeat(np.asarray(tbl["term"].to_pylist(), object), counts)
+    decoded = sorted(
+        (t, int(i), int(f), int(d))
+        for t, i, f, d in zip(terms, ids, tfs, dls)
     )
-    assert from_blocks.exceptAll(from_postings).count() == 0
-    assert from_postings.exceptAll(from_blocks).count() == 0
+    assert decoded == sorted(tuple(r) for r in reference.collect())
 
 
 def test_wand_prunes_on_skewed_corpus(spark, tmp_path):

@@ -270,3 +270,30 @@ def test_wand_adaptive_fallback_flat_and_skewed(spark, tmp_path):
     zst = wand_prune_stats(zengine, q, k=10)
     assert zst["would_fallback"] is False, zst
     assert zst["rounds"][-1]["pruned_fraction"] > 0, zst
+
+
+def test_wand_partially_warmed_engine_skips_fallback_check(spark, tmp_path):
+    """An engine with the pinned df and block-max maps but without the
+    block min/count maps (a partially warmed engine) cannot run the
+    adaptive-fallback check: WAND must prune as it would without the
+    check and still equal exhaustive BM25, instead of raising KeyError
+    on the missing per-term minimum."""
+    from conftest import build_fixture_engine
+    from search_engine_spark.operators.wand import wand_topk
+
+    flat = [
+        {"url": f"https://flat/{i}", "title": "flat",
+         "text": "alpha beta gamma delta", "rank": i + 1}
+        for i in range(40)
+    ]
+    engine = build_fixture_engine(
+        spark, flat, tmp_path / "partial_idx", config=EngineConfig(
+            block_size=4)
+    )
+    engine.warm(pin_docs=False)
+    assert engine._stats_map and engine._block_max_map
+    engine._block_min_map = None
+    engine._block_cnt_map = None
+    assert rows(wand_topk(engine, "alpha beta", k=5)) == rows(
+        engine.search_bm25("alpha beta", k=5)
+    )

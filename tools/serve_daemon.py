@@ -55,7 +55,8 @@ Usage:
 few stat calls — serving/local.snapshot_token) and pick up appended
 segments / refreshed stats / new tombstones without restarting: the
 local tier reopens its reader, the spark tier re-warms the engine. The
-serving fleet's rolling refresh for serve-while-ingest.
+serving fleet's rolling refresh for serve-while-ingest. Not with
+--shards > 1: the shard views are a snapshot of the blocks files.
 
 --wand (local tier): BM25 ranking answered through serve-tier Block-Max
 WAND (serving/local.py wand_topk) — identical results, but per-query IO
@@ -188,6 +189,10 @@ def main() -> None:
     if args.shards > 1 and args.wand:
         ap.error("--wand is per-node; the fleet coordinator serves the "
                  "merged exhaustive slivers (identical results)")
+    if args.shards > 1 and args.refresh == "auto":
+        ap.error("--refresh auto needs --shards 1: shard views freeze "
+                 "their blocks files at start, so a refreshed fleet "
+                 "would mix new stats and tombstones with old postings")
 
     cfg = EngineConfig(stop_words=DEMO_STOP_WORDS,
                        score_weights=ScoreWeights())
