@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from search_engine_spark.operators.corpus_queries import QUERIES  # noqa: E402
+from search_engine_spark.operators.registry import QUERIES  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -9,8 +9,11 @@ programs:
   (``operators.search``)
 - BM25 + block-max WAND scale path (``operators.bm25``, ``operators.wand``)
 - resumable segment-based builds with per-partition lineage + metrics
-- training-data pipeline operators: dedup, similarity search, text metrics
-  (``operators.dedup``, ``operators.ann``, ``functions.text_metrics``)
+- in-process serving off the built index, single node or term-range
+  fleet (``serving.local``, ``serving.fleet``)
+- DuckDB-oracle-checked corpus operators (dedup, similarity search, text
+  metrics, …) in ``operators.corpus_queries`` and the ``*_extras``
+  modules, assembled into one registry by ``operators.registry``
 
 Design stance: declare logical plans with the DataFrame API and let
 Catalyst/Tungsten pick physical strategies; Python appears only behind

@@ -1,5 +1,5 @@
 """SymSpell deletion-neighborhood helpers, shared by the corpus-level
-spell-correction operator (operators/analytics_extras.q_symspell_suggest)
+spell-correction operator (operators/corpus_queries.q_symspell_suggest)
 and the engine's did-you-mean surface (SearchEngine.suggest).
 
 The trick (Garbe's SymSpell): if levenshtein(a, b) <= d then deleting

@@ -1,10 +1,12 @@
 """Window / sampling / near-dup analytics extras, each with a DuckDB twin.
 
 Second batch of training-data-pipeline operators (SURVEY.md §2 extensions):
-grouped top-k, sliding-window aggregates, anti-join filtering, pivot
-counts, edit-distance near-dup pairs, stratified sampling, value-decile
-histograms, TF-IDF term extraction, and the materialized output of the
-near-dup dedup pipeline (survivor set).
+sliding-window aggregates, anti-join filtering, pivot counts,
+edit-distance near-dup pairs, stratified sampling, value-decile
+histograms, TF-IDF term extraction, term suggestion, exact KNN join, and
+the materialized output of the near-dup dedup pipeline (survivor set).
+The grouped top-k and SymSpell operators of this batch live in
+``corpus_queries`` (both are in the driver's checked set).
 
 Same contract as ``corpus_queries``: every computed column is aliased
 identically in the Spark plan and the oracle SQL; integer-exact columns
@@ -19,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .corpus_queries import (
-    QUERIES,
+    TOPK_SALTS,
     _TOKS_SQL,
     _band_selects,
     _docs,
@@ -30,46 +32,6 @@ from .corpus_queries import (
     _tokens_df,
     q_dedup_clusters,
 )
-
-# --------------------------------------------------------------------------
-# grouped top-k via salted two-stage window (skew-safe)
-# --------------------------------------------------------------------------
-
-TOPK_K = 3
-TOPK_SALTS = 8  # stage-1 fan-out; survivors per group = TOPK_K * TOPK_SALTS
-
-
-def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-K longest documents per language. A single
-    ``row_number() OVER (PARTITION BY lang)`` would funnel every row of a
-    hot language through one task — the Zipf problem SURVEY.md §6 calls
-    out for head terms. Instead: stage 1 takes top-K within (lang, salt)
-    — TOPK_SALTS parallel slices per language, each bounded — stage 2
-    re-ranks the ≤ K·TOPK_SALTS survivors per language. Exact (any global
-    top-K row is top-K within its salt slice) and the stage-2 window sees
-    a constant number of rows per group regardless of corpus size."""
-    docs = _docs(spark, sf_dir).select("lang", "doc_id", "n_chars")
-    order = [F.desc("n_chars"), F.asc("doc_id")]
-    stage1 = Window.partitionBy("lang", F.col("doc_id") % TOPK_SALTS).orderBy(*order)
-    stage2 = Window.partitionBy("lang").orderBy(*order)
-    return (
-        docs.withColumn("rk", F.row_number().over(stage1))
-        .filter(F.col("rk") <= TOPK_K)
-        .drop("rk")
-        .withColumn("rk", F.row_number().over(stage2).cast("long"))
-        .filter(F.col("rk") <= TOPK_K)
-        .orderBy("lang", "rk")
-    )
-
-
-SQL_TOPK_PER_GROUP = f"""
-SELECT lang, doc_id, n_chars, rk FROM (
-  SELECT lang, doc_id, n_chars,
-         row_number() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id ASC) AS rk
-  FROM documents
-) WHERE rk <= {TOPK_K} ORDER BY lang, rk
-"""
-
 
 # --------------------------------------------------------------------------
 # sliding-window moving aggregate over the event stream
@@ -648,111 +610,6 @@ FROM ranked GROUP BY cluster ORDER BY cluster
 
 
 # --------------------------------------------------------------------------
-# SymSpell spell correction (deletion-neighborhood equi-join — the scale
-# path for term_suggest's broadcast nested-loop)
-# --------------------------------------------------------------------------
-
-SYMSPELL_TYPOS = ["fitler", "scann", "qury"]  # filter/scan/query typos
-SYMSPELL_MAX_DIST = 2
-SYMSPELL_K = 3
-
-# deletion-neighborhood expr shared with SearchEngine.suggest
-from ..functions.suggest import deletion_variants as _deletion_variants  # noqa: E402
-
-
-def q_symspell_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spell correction via SymSpell (Garbe's deletion-neighborhood
-    trick): if levenshtein(a, b) <= 2 then deleting <= 2 chars from each
-    reaches a common string (delete a's substituted+deleted chars, b's
-    substituted+inserted chars), so depth-2 delete neighborhoods of the
-    typo and the true term always intersect. Candidates therefore come
-    from an EQUI-JOIN on the variant string — O(|V|·L²) precomputable
-    index rows instead of term_suggest's O(|V|·|Q|) nested-loop
-    levenshtein — and the final levenshtein() verification on the
-    (tiny) candidate set makes the result set exactly the brute-force
-    one; the oracle twin IS the brute force, so the driver hash proves
-    the neighborhood argument. At scale the vocab-variant side is built
-    once from the index's term_stats table and bucketed on the variant;
-    per-query work is |variants(q)| ≈ L² hash lookups."""
-    toks = _tokens_df(spark, sf_dir)
-    vocab = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.length("term") >= 2)
-        .groupBy("term")
-        .agg(F.countDistinct("doc_id").alias("df"))
-    )
-    vocab_var = vocab.select(
-        "term", "df", F.explode(_deletion_variants("term")).alias("variant")
-    )
-    qs = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(t) for t in SYMSPELL_TYPOS])
-        ).alias("query_term")
-    )
-    q_var = qs.select(
-        "query_term",
-        F.explode(_deletion_variants("query_term")).alias("variant"),
-    )
-    cand = (
-        vocab_var.join(F.broadcast(q_var), "variant")
-        .select("query_term", "term", "df")
-        .distinct()
-        .withColumn(
-            "dist", F.levenshtein("query_term", "term").cast("long")
-        )
-        .filter(F.col("dist") <= SYMSPELL_MAX_DIST)
-    )
-    ranked = cand.withColumn(
-        "rank",
-        F.row_number()
-        .over(
-            Window.partitionBy("query_term").orderBy(
-                F.asc("dist"), F.desc("df"), F.asc("term")
-            )
-        )
-        .cast("long"),
-    )
-    return (
-        ranked.filter(F.col("rank") <= SYMSPELL_K)
-        .select(
-            "query_term", "rank", F.col("term").alias("suggestion"),
-            "dist", "df",
-        )
-        .orderBy("query_term", "rank")
-    )
-
-
-_symspell_typos_in = ", ".join(f"'{t}'" for t in SYMSPELL_TYPOS)
-
-# the oracle is deliberately the BRUTE-FORCE formulation: matching it
-# bit-for-bit is the proof that the deletion-neighborhood candidate set
-# loses nothing within the verified distance bound
-SQL_SYMSPELL_SUGGEST = f"""
-WITH vocab AS (
-  SELECT term, count(DISTINCT doc_id) AS df FROM (
-    SELECT doc_id, unnest({_TOKS_SQL}) AS term FROM documents
-  ) WHERE len(term) >= 2 GROUP BY term
-), qs AS (
-  SELECT unnest([{_symspell_typos_in}]) AS query_term
-), cand AS (
-  SELECT query_term, term,
-         CAST(levenshtein(query_term, term) AS BIGINT) AS dist, df
-  FROM qs, vocab
-  WHERE levenshtein(query_term, term) <= {SYMSPELL_MAX_DIST}
-), ranked AS (
-  SELECT query_term, term, dist, df,
-         CAST(row_number() OVER (
-           PARTITION BY query_term ORDER BY dist ASC, df DESC, term ASC
-         ) AS BIGINT) AS rank
-  FROM cand
-)
-SELECT query_term, rank, term AS suggestion, dist, df
-FROM ranked WHERE rank <= {SYMSPELL_K}
-ORDER BY query_term, rank
-"""
-
-
-# --------------------------------------------------------------------------
 # exact KNN join over embeddings (hard-negative mining / similarity search)
 # --------------------------------------------------------------------------
 
@@ -768,8 +625,8 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets (ann_lsh/ann_ivf, the designated paths when the query side
     stops fitting in a broadcast). The corpus scans ONCE; the broadcast
     query block rides to every partition; top-K uses the same salted
-    two-stage window as topk_per_group so no single reducer sees a full
-    query group. Sim is round-4 like the other cosine twins (identical
+    two-stage window as q_topk_per_group so no single reducer sees a
+    full query group. Sim is round-4 like the other cosine twins (identical
     IEEE folds on both engines)."""
     emb = _embeddings(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
@@ -833,8 +690,6 @@ SELECT query_id, rk, neighbor_id, cos_sim FROM (
 
 
 EXTRA_QUERIES = {
-    "topk_per_group": (q_topk_per_group, SQL_TOPK_PER_GROUP),
-    "symspell_suggest": (q_symspell_suggest, SQL_SYMSPELL_SUGGEST),
     "knn_join": (q_knn_join, SQL_KNN_JOIN),
     "cluster_survivors": (q_cluster_survivors, SQL_CLUSTER_SURVIVORS),
     "term_suggest": (q_term_suggest, SQL_TERM_SUGGEST),
@@ -847,5 +702,3 @@ EXTRA_QUERIES = {
     "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
     "dedup_survivors": (q_dedup_survivors, SQL_DEDUP_SURVIVORS),
 }
-
-QUERIES.update(EXTRA_QUERIES)

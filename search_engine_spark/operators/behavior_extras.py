@@ -27,7 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES, _embeddings, _events
+from .corpus_queries import (
+    _embeddings,
+    _events,
+    _km_assign,
+    _km_sql_assign,
+    _km_sql_update,
+    _km_update,
+)
 
 _WEEK_US = 7 * 86400 * 1_000_000
 
@@ -189,40 +196,6 @@ FROM orders GROUP BY o_custkey ORDER BY custkey
 
 KMEANS_K = 4
 KMEANS_ITERS = 2
-KMEANS_DIM = 64  # embeddings table dimension (TESTDATA.md)
-_KM_SCALE = 100000000.0  # 1e8: component quantum for exact int64 mean sums
-
-
-def _km_distances(centroids: dict[int, list[float]]):
-    """Squared-L2 distance columns d{cid} as a sequential left fold over
-    the dims (F.aggregate), matching DuckDB's list_reduce fold order so
-    the doubles are bit-identical."""
-    cols = []
-    for cid in sorted(centroids):
-        ce = F.array(*[F.lit(float(v)) for v in centroids[cid]])
-        d = F.aggregate(
-            F.zip_with("ee", ce, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        cols.append(d.alias(f"d{cid}"))
-    return cols
-
-
-def _km_assign(df: DataFrame, centroids: dict[int, list[float]]) -> DataFrame:
-    """(vec_id, ee, cluster): argmin over the distance columns, lowest
-    cluster id on exact ties (first-match CASE chain — same ordering as
-    the oracle's ``row_number() ORDER BY d, cid``)."""
-    cids = sorted(centroids)
-    with_d = df.select("vec_id", "ee", *_km_distances(centroids))
-    expr = F.lit(cids[-1])
-    for i in range(len(cids) - 2, -1, -1):
-        cond = None
-        for j in cids[i + 1 :]:
-            c = F.col(f"d{cids[i]}") <= F.col(f"d{j}")
-            cond = c if cond is None else (cond & c)
-        expr = F.when(cond, F.lit(cids[i])).otherwise(expr)
-    return with_d.select("vec_id", "ee", expr.alias("cluster"))
 
 
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,71 +217,17 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         int(r["vec_id"]): list(r["ee"])
         for r in emb.filter(F.col("vec_id") < KMEANS_K).collect()
     }
-    centroids = init
-    assigned = _km_assign(emb, centroids)
+    assigned = _km_assign(emb, init)
     for _ in range(KMEANS_ITERS - 1):
         # centroid update only BETWEEN assignments: updating after the
         # final assignment would run a full (and discarded) aggregation
         # job per invocation
-        sums = assigned.groupBy("cluster").agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum(
-                    F.round(F.col("ee")[i] * _KM_SCALE, 0).cast("long")
-                ).alias(f"s{i}")
-                for i in range(KMEANS_DIM)
-            ],
-        )
-        centroids = {
-            int(r["cluster"]): [
-                float(r[f"s{i}"]) / (float(r["n"]) * _KM_SCALE)
-                for i in range(KMEANS_DIM)
-            ]
-            for r in sums.collect()  # ≤ k rows: bounded driver state
-        }
-        assigned = _km_assign(emb, centroids)
+        assigned = _km_assign(emb, _km_update(assigned))
     return (
         assigned.groupBy(F.col("cluster").cast("long").alias("cluster_id"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_members"))
         .orderBy("cluster_id")
     )
-
-
-_KM_D = KMEANS_DIM
-_KM_R = f"range(1, {_KM_D + 1})"
-
-
-def _km_sql_assign(src: str, cents: str, out: str) -> str:
-    return f"""
-{out} AS (
-  SELECT vec_id, ee, cid AS cluster FROM (
-    SELECT e.vec_id, e.ee, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_reduce(
-               list_transform({_KM_R},
-                 i -> (e.ee[i] - c.ce[i]) * (e.ee[i] - c.ce[i])),
-               (a, b) -> a + b) ASC, c.cid ASC
-           ) AS rn
-    FROM {src} e, {cents} c
-  ) WHERE rn = 1
-)"""
-
-
-def _km_sql_update(src: str, out: str) -> str:
-    return f"""
-{out} AS (
-  SELECT cluster AS cid,
-         list(CAST(su AS DOUBLE) / (CAST(n AS DOUBLE) * {_KM_SCALE})
-              ORDER BY i) AS ce
-  FROM (
-    SELECT cluster, i,
-           sum(CAST(round(ee[CAST(i AS INT)] * {_KM_SCALE}) AS BIGINT)) AS su,
-           count(*) AS n
-    FROM {src}, range(1, {_KM_D + 1}) r(i)
-    GROUP BY cluster, i
-  ) GROUP BY cluster
-)"""
 
 
 SQL_KMEANS_CLUSTERS = f"""
@@ -329,5 +248,3 @@ EXTRA_QUERIES = {
     "rfm_segments": (q_rfm_segments, SQL_RFM_SEGMENTS),
     "kmeans_clusters": (q_kmeans_clusters, SQL_KMEANS_CLUSTERS),
 }
-
-QUERIES.update(EXTRA_QUERIES)

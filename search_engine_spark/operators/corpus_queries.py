@@ -14,11 +14,28 @@ string; floats are rounded explicitly on both sides.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEMO_STOP_WORDS
+from ..functions.suggest import deletion_variants as _deletion_variants
 from ..functions.tokenizer import duckdb_tokenize_sql, tokenize_expr
+from .multimodal import (
+    SQL_MULTIMODAL_AUDIO_DECODE,
+    SQL_MULTIMODAL_AUDIO_FRAMES,
+    SQL_MULTIMODAL_FEATURES,
+    SQL_MULTIMODAL_FRAMES,
+    SQL_MULTIMODAL_IMAGE_DECODE,
+    SQL_MULTIMODAL_IMAGE_RESIZE,
+    SQL_MULTIMODAL_RESIZE,
+    q_multimodal_audio_decode,
+    q_multimodal_audio_frames,
+    q_multimodal_features,
+    q_multimodal_frames,
+    q_multimodal_image_decode,
+    q_multimodal_image_resize,
+    q_multimodal_resize,
+)
 
 # shared constants between Spark impls and oracle SQL
 CONJ_TERMS = ["filter", "join", "window"]
@@ -1210,8 +1227,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     session starts (classic lag + cumulative-sum window pair). Per-session
     rollup keeps the output compact. Window partitions by user_id, so at
     100 TB the shuffle key is the natural entity key — no global sort."""
-    from pyspark.sql import Window
-
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # NTZ -> integer epoch microseconds (UTC session). All arithmetic that
@@ -1738,30 +1753,50 @@ FROM reach GROUP BY u ORDER BY doc_id
 IVF_NLIST = 8    # coarse centroids: k-means-trained from seeds vec_id 1..8
 IVF_NPROBE = 2   # probe the query's 2 nearest lists
 
+# Lloyd k-means primitives, shared with behavior_extras.q_kmeans_clusters
+KMEANS_DIM = 64  # embeddings table dimension (TESTDATA.md)
+_KM_SCALE = 100000000.0  # 1e8: component quantum for exact int64 mean sums
 
-def _ivf_trained_centroids(spark: SparkSession, sf_dir: str) -> dict:
-    """IVF coarse centroids TRAINED with the same bit-exact Lloyd recipe
-    as q_kmeans_clusters (behavior_extras): seeds = vectors vec_id
-    1..IVF_NLIST, one argmin-L2 assignment, one mean update with
-    int64-quantized (×1e8) component sums — so the trained means are an
-    exact, summation-order-independent function of the input that the
-    DuckDB twin reproduces bit-for-bit. Untrained first-K-vector
-    centroids partition the space no better than random; one Lloyd
-    update already moves each centroid to its region's mean. Driver
-    state is k rows (bounded); at scale both training jobs are one
-    narrow map + one k-row partial-aggregated shuffle."""
-    from .behavior_extras import _KM_SCALE, KMEANS_DIM, _km_assign
 
-    emb = _embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("ee")
-    )
-    seeds = {
-        int(r["vec_id"]): list(r["ee"])
-        for r in emb.filter(
-            F.col("vec_id").between(1, IVF_NLIST)
-        ).collect()
-    }
-    sums = _km_assign(emb, seeds).groupBy("cluster").agg(
+def _km_distances(centroids: dict[int, list[float]]):
+    """Squared-L2 distance columns d{cid} as a sequential left fold over
+    the dims (F.aggregate), matching DuckDB's list_reduce fold order so
+    the doubles are bit-identical."""
+    cols = []
+    for cid in sorted(centroids):
+        ce = F.array(*[F.lit(float(v)) for v in centroids[cid]])
+        d = F.aggregate(
+            F.zip_with("ee", ce, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        )
+        cols.append(d.alias(f"d{cid}"))
+    return cols
+
+
+def _km_assign(df: DataFrame, centroids: dict[int, list[float]]) -> DataFrame:
+    """(vec_id, ee, cluster): argmin over the distance columns, lowest
+    cluster id on exact ties (first-match CASE chain — same ordering as
+    the oracle's ``row_number() ORDER BY d, cid``)."""
+    cids = sorted(centroids)
+    with_d = df.select("vec_id", "ee", *_km_distances(centroids))
+    expr = F.lit(cids[-1])
+    for i in range(len(cids) - 2, -1, -1):
+        cond = None
+        for j in cids[i + 1 :]:
+            c = F.col(f"d{cids[i]}") <= F.col(f"d{j}")
+            cond = c if cond is None else (cond & c)
+        expr = F.when(cond, F.lit(cids[i])).otherwise(expr)
+    return with_d.select("vec_id", "ee", expr.alias("cluster"))
+
+
+def _km_update(assigned: DataFrame) -> dict[int, list[float]]:
+    """One Lloyd mean update over ``_km_assign`` output: per-cluster
+    component means from int64-quantized (×1e8) sums, so the means are
+    an exact, summation-order-independent function of the input that
+    the DuckDB twins (``_km_sql_update``) reproduce bit-for-bit. One
+    partial-aggregated shuffle; k rows reach the driver."""
+    sums = assigned.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n"),
         *[
             F.sum(
@@ -1775,8 +1810,29 @@ def _ivf_trained_centroids(spark: SparkSession, sf_dir: str) -> dict:
             float(r[f"s{i}"]) / (float(r["n"]) * _KM_SCALE)
             for i in range(KMEANS_DIM)
         ]
-        for r in sums.collect()  # ≤ IVF_NLIST rows: bounded driver state
+        for r in sums.collect()  # ≤ k rows: bounded driver state
     }
+
+
+def _ivf_trained_centroids(spark: SparkSession, sf_dir: str) -> dict:
+    """IVF coarse centroids TRAINED with the same bit-exact Lloyd recipe
+    as q_kmeans_clusters (behavior_extras): seeds = vectors vec_id
+    1..IVF_NLIST, one argmin-L2 assignment, one ``_km_update``.
+    Untrained first-K-vector centroids partition the space no better
+    than random; one Lloyd update already moves each centroid to its
+    region's mean. Driver state is k rows (bounded); at scale both
+    training jobs are one narrow map + one k-row partial-aggregated
+    shuffle."""
+    emb = _embeddings(spark, sf_dir).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("ee")
+    )
+    seeds = {
+        int(r["vec_id"]): list(r["ee"])
+        for r in emb.filter(
+            F.col("vec_id").between(1, IVF_NLIST)
+        ).collect()
+    }
+    return _km_update(_km_assign(emb, seeds))
 
 
 def q_ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1837,44 +1893,55 @@ def q_ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The cent CTE below mirrors _ivf_trained_centroids: one argmin-L2 Lloyd
-# assignment from seeds vec_id 1..IVF_NLIST, then int64-quantized (×1e8)
-# component-mean update — the same unrolled-SQL shape as
-# behavior_extras._km_sql_assign/_km_sql_update (dim = 64 per TESTDATA.md;
-# inlined here because behavior_extras imports this module).
-SQL_ANN_IVF_COSINE = f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-), seeds AS (
-  SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id BETWEEN 1 AND {IVF_NLIST}
-), a1 AS (
+_KM_R = f"range(1, {KMEANS_DIM + 1})"
+
+
+def _km_sql_assign(src: str, cents: str, out: str) -> str:
+    return f"""
+{out} AS (
   SELECT vec_id, ee, cid AS cluster FROM (
-    SELECT e.vec_id, e.e AS ee, c.cid,
+    SELECT e.vec_id, e.ee, c.cid,
            row_number() OVER (
              PARTITION BY e.vec_id
              ORDER BY list_reduce(
-               list_transform(range(1, 65),
-                 i -> (e.e[i] - c.ce[i]) * (e.e[i] - c.ce[i])),
+               list_transform({_KM_R},
+                 i -> (e.ee[i] - c.ce[i]) * (e.ee[i] - c.ce[i])),
                (a, b) -> a + b) ASC, c.cid ASC
            ) AS rn
-    FROM v e, seeds c
+    FROM {src} e, {cents} c
   ) WHERE rn = 1
-), cent AS (
+)"""
+
+
+def _km_sql_update(src: str, out: str) -> str:
+    return f"""
+{out} AS (
   SELECT cluster AS cid,
-         list(CAST(su AS DOUBLE) / (CAST(n AS DOUBLE) * 100000000.0)
-              ORDER BY i) AS c
+         list(CAST(su AS DOUBLE) / (CAST(n AS DOUBLE) * {_KM_SCALE})
+              ORDER BY i) AS ce
   FROM (
     SELECT cluster, i,
-           sum(CAST(round(ee[CAST(i AS INT)] * 100000000.0) AS BIGINT)) AS su,
+           sum(CAST(round(ee[CAST(i AS INT)] * {_KM_SCALE}) AS BIGINT)) AS su,
            count(*) AS n
-    FROM a1, range(1, 65) r(i)
+    FROM {src}, {_KM_R} r(i)
     GROUP BY cluster, i
   ) GROUP BY cluster
-), sims AS (
+)"""
+
+
+# The cent CTE mirrors _ivf_trained_centroids: one argmin-L2 Lloyd
+# assignment from seeds vec_id 1..IVF_NLIST, then one quantized mean
+# update — the same unrolled SQL as behavior_extras' k-means twin.
+SQL_ANN_IVF_COSINE = f"""
+WITH v AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ee FROM embeddings
+), seeds AS (
+  SELECT vec_id AS cid, ee AS ce FROM v WHERE vec_id BETWEEN 1 AND {IVF_NLIST}
+),{_km_sql_assign("v", "seeds", "a1")},{_km_sql_update("a1", "cent")}, sims AS (
   SELECT v.vec_id, cent.cid,
-         list_dot_product(v.e, cent.c)
-           / (sqrt(list_dot_product(v.e, v.e))
-              * sqrt(list_dot_product(cent.c, cent.c))) AS csim
+         list_dot_product(v.ee, cent.ce)
+           / (sqrt(list_dot_product(v.ee, v.ee))
+              * sqrt(list_dot_product(cent.ce, cent.ce))) AS csim
   FROM v, cent
 ), asn AS (
   SELECT vec_id, cid AS centroid
@@ -1886,10 +1953,10 @@ WITH v AS (
 ), probes AS (
   SELECT cid AS centroid FROM sims WHERE vec_id = 0
   ORDER BY csim DESC, cid ASC LIMIT {IVF_NPROBE}
-), q AS (SELECT e AS qe FROM v WHERE vec_id = 0)
+), q AS (SELECT ee AS qe FROM v WHERE vec_id = 0)
 SELECT asn.vec_id, asn.centroid,
-       round(list_dot_product(v.e, q.qe)
-             / (sqrt(list_dot_product(v.e, v.e))
+       round(list_dot_product(v.ee, q.qe)
+             / (sqrt(list_dot_product(v.ee, v.ee))
                 * sqrt(list_dot_product(q.qe, q.qe))), 4) AS cos_sim
 FROM asn
 JOIN probes ON asn.centroid = probes.centroid
@@ -1960,8 +2027,6 @@ GROUP BY doc_id ORDER BY doc_id
 # --------------------------------------------------------------------------
 
 def q_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..sources.transcripts import synthesize_transcripts
 
     tx = synthesize_transcripts(spark, f"{sf_dir}/documents.parquet")
@@ -2024,8 +2089,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as q_sessionize) and missing matches surface as -1 rather
     than NULL so Spark and the DuckDB ASOF JOIN twin agree on the exact
     dtype at the driver's hash layer."""
-    from pyspark.sql import Window
-
     ev = _events(spark, sf_dir)
     sides = ev.filter(F.col("event_type").isin("purchase", "view")).select(
         "user_id",
@@ -2184,7 +2247,151 @@ FROM m ORDER BY doc_id
 """
 
 
-QUERIES = {
+# --------------------------------------------------------------------------
+# grouped top-k via salted two-stage window (skew-safe)
+# --------------------------------------------------------------------------
+
+TOPK_K = 3
+TOPK_SALTS = 8  # stage-1 fan-out; survivors per group = TOPK_K * TOPK_SALTS
+
+
+def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-K longest documents per language. A single
+    ``row_number() OVER (PARTITION BY lang)`` would funnel every row of a
+    hot language through one task — the Zipf problem SURVEY.md §6 calls
+    out for head terms. Instead: stage 1 takes top-K within (lang, salt)
+    — TOPK_SALTS parallel slices per language, each bounded — stage 2
+    re-ranks the ≤ K·TOPK_SALTS survivors per language. Exact (any global
+    top-K row is top-K within its salt slice) and the stage-2 window sees
+    a constant number of rows per group regardless of corpus size."""
+    docs = _docs(spark, sf_dir).select("lang", "doc_id", "n_chars")
+    order = [F.desc("n_chars"), F.asc("doc_id")]
+    stage1 = Window.partitionBy("lang", F.col("doc_id") % TOPK_SALTS).orderBy(*order)
+    stage2 = Window.partitionBy("lang").orderBy(*order)
+    return (
+        docs.withColumn("rk", F.row_number().over(stage1))
+        .filter(F.col("rk") <= TOPK_K)
+        .drop("rk")
+        .withColumn("rk", F.row_number().over(stage2).cast("long"))
+        .filter(F.col("rk") <= TOPK_K)
+        .orderBy("lang", "rk")
+    )
+
+
+SQL_TOPK_PER_GROUP = f"""
+SELECT lang, doc_id, n_chars, rk FROM (
+  SELECT lang, doc_id, n_chars,
+         row_number() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id ASC) AS rk
+  FROM documents
+) WHERE rk <= {TOPK_K} ORDER BY lang, rk
+"""
+
+
+# --------------------------------------------------------------------------
+# SymSpell spell correction (deletion-neighborhood equi-join — the scale
+# path for term_suggest's broadcast nested-loop)
+# --------------------------------------------------------------------------
+
+SYMSPELL_TYPOS = ["fitler", "scann", "qury"]  # filter/scan/query typos
+SYMSPELL_MAX_DIST = 2
+SYMSPELL_K = 3
+
+
+def q_symspell_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spell correction via SymSpell (Garbe's deletion-neighborhood
+    trick): if levenshtein(a, b) <= 2 then deleting <= 2 chars from each
+    reaches a common string (delete a's substituted+deleted chars, b's
+    substituted+inserted chars), so depth-2 delete neighborhoods of the
+    typo and the true term always intersect. Candidates therefore come
+    from an EQUI-JOIN on the variant string — O(|V|·L²) precomputable
+    index rows instead of term_suggest's O(|V|·|Q|) nested-loop
+    levenshtein — and the final levenshtein() verification on the
+    (tiny) candidate set makes the result set exactly the brute-force
+    one; the oracle twin IS the brute force, so the driver hash proves
+    the neighborhood argument. At scale the vocab-variant side is built
+    once from the index's term_stats table and bucketed on the variant;
+    per-query work is |variants(q)| ≈ L² hash lookups."""
+    toks = _tokens_df(spark, sf_dir)
+    vocab = (
+        toks.select("doc_id", F.explode("toks").alias("term"))
+        .filter(F.length("term") >= 2)
+        .groupBy("term")
+        .agg(F.countDistinct("doc_id").alias("df"))
+    )
+    vocab_var = vocab.select(
+        "term", "df", F.explode(_deletion_variants("term")).alias("variant")
+    )
+    qs = spark.range(1).select(
+        F.explode(
+            F.array(*[F.lit(t) for t in SYMSPELL_TYPOS])
+        ).alias("query_term")
+    )
+    q_var = qs.select(
+        "query_term",
+        F.explode(_deletion_variants("query_term")).alias("variant"),
+    )
+    cand = (
+        vocab_var.join(F.broadcast(q_var), "variant")
+        .select("query_term", "term", "df")
+        .distinct()
+        .withColumn(
+            "dist", F.levenshtein("query_term", "term").cast("long")
+        )
+        .filter(F.col("dist") <= SYMSPELL_MAX_DIST)
+    )
+    ranked = cand.withColumn(
+        "rank",
+        F.row_number()
+        .over(
+            Window.partitionBy("query_term").orderBy(
+                F.asc("dist"), F.desc("df"), F.asc("term")
+            )
+        )
+        .cast("long"),
+    )
+    return (
+        ranked.filter(F.col("rank") <= SYMSPELL_K)
+        .select(
+            "query_term", "rank", F.col("term").alias("suggestion"),
+            "dist", "df",
+        )
+        .orderBy("query_term", "rank")
+    )
+
+
+_symspell_typos_in = ", ".join(f"'{t}'" for t in SYMSPELL_TYPOS)
+
+# the oracle is deliberately the BRUTE-FORCE formulation: matching it
+# bit-for-bit is the proof that the deletion-neighborhood candidate set
+# loses nothing within the verified distance bound
+SQL_SYMSPELL_SUGGEST = f"""
+WITH vocab AS (
+  SELECT term, count(DISTINCT doc_id) AS df FROM (
+    SELECT doc_id, unnest({_TOKS_SQL}) AS term FROM documents
+  ) WHERE len(term) >= 2 GROUP BY term
+), qs AS (
+  SELECT unnest([{_symspell_typos_in}]) AS query_term
+), cand AS (
+  SELECT query_term, term,
+         CAST(levenshtein(query_term, term) AS BIGINT) AS dist, df
+  FROM qs, vocab
+  WHERE levenshtein(query_term, term) <= {SYMSPELL_MAX_DIST}
+), ranked AS (
+  SELECT query_term, term, dist, df,
+         CAST(row_number() OVER (
+           PARTITION BY query_term ORDER BY dist ASC, df DESC, term ASC
+         ) AS BIGINT) AS rank
+  FROM cand
+)
+SELECT query_term, rank, term AS suggestion, dist, df
+FROM ranked WHERE rank <= {SYMSPELL_K}
+ORDER BY query_term, rank
+"""
+
+
+# The driver's correctness sweep (CORRECTNESS_r05.json): these 50 names,
+# in this order, are the first 50 entries of registry.QUERIES.
+CORPUS_QUERIES = {
     "tokenize_count": (q_tokenize_count, SQL_TOKENIZE_COUNT),
     "doc_count": (q_doc_count, SQL_DOC_COUNT),
     "term_df_top50": (q_term_df_top50, SQL_TERM_DF_TOP50),
@@ -2232,74 +2439,30 @@ QUERIES = {
     "conv_stats": (q_conv_stats, SQL_CONV_STATS),
     "asof_join": (q_asof_join, SQL_ASOF_JOIN),
     "quality_filter": (q_quality_filter, SQL_QUALITY_FILTER),
+    # multimodal plumbing (binary columns + mapInPandas)
+    "multimodal_features": (q_multimodal_features, SQL_MULTIMODAL_FEATURES),
+    "multimodal_resize": (q_multimodal_resize, SQL_MULTIMODAL_RESIZE),
+    "multimodal_frames": (q_multimodal_frames, SQL_MULTIMODAL_FRAMES),
+    # real-codec tier: genuine PNG/WAV bytes (pure-stdlib zlib/wave
+    # codecs) decoded back and verified pixel/sample-exactly against
+    # closed-form SQL
+    "multimodal_image_decode": (
+        q_multimodal_image_decode, SQL_MULTIMODAL_IMAGE_DECODE),
+    "multimodal_image_resize": (
+        q_multimodal_image_resize, SQL_MULTIMODAL_IMAGE_RESIZE),
+    "multimodal_audio_decode": (
+        q_multimodal_audio_decode, SQL_MULTIMODAL_AUDIO_DECODE),
+    "multimodal_audio_frames": (
+        q_multimodal_audio_frames, SQL_MULTIMODAL_AUDIO_FRAMES),
+    "topk_per_group": (q_topk_per_group, SQL_TOPK_PER_GROUP),
+    "symspell_suggest": (q_symspell_suggest, SQL_SYMSPELL_SUGGEST),
 }
 
-# multimodal plumbing lives in its own module (binary columns + mapInPandas)
-from .multimodal import (  # noqa: E402
-    SQL_MULTIMODAL_FEATURES,
-    SQL_MULTIMODAL_FRAMES,
-    SQL_MULTIMODAL_RESIZE,
-    q_multimodal_features,
-    q_multimodal_frames,
-    q_multimodal_resize,
-)
 
-QUERIES["multimodal_features"] = (q_multimodal_features, SQL_MULTIMODAL_FEATURES)
-QUERIES["multimodal_resize"] = (q_multimodal_resize, SQL_MULTIMODAL_RESIZE)
-QUERIES["multimodal_frames"] = (q_multimodal_frames, SQL_MULTIMODAL_FRAMES)
-
-# real-codec tier: genuine PNG/WAV bytes (pure-stdlib zlib/wave codecs)
-# decoded back and verified pixel/sample-exactly against closed-form SQL
-from .multimodal import (  # noqa: E402
-    SQL_MULTIMODAL_AUDIO_DECODE,
-    SQL_MULTIMODAL_AUDIO_FRAMES,
-    SQL_MULTIMODAL_IMAGE_DECODE,
-    SQL_MULTIMODAL_IMAGE_RESIZE,
-    q_multimodal_audio_decode,
-    q_multimodal_audio_frames,
-    q_multimodal_image_decode,
-    q_multimodal_image_resize,
-)
-
-QUERIES["multimodal_image_decode"] = (
-    q_multimodal_image_decode, SQL_MULTIMODAL_IMAGE_DECODE)
-QUERIES["multimodal_image_resize"] = (
-    q_multimodal_image_resize, SQL_MULTIMODAL_IMAGE_RESIZE)
-QUERIES["multimodal_audio_decode"] = (
-    q_multimodal_audio_decode, SQL_MULTIMODAL_AUDIO_DECODE)
-QUERIES["multimodal_audio_frames"] = (
-    q_multimodal_audio_frames, SQL_MULTIMODAL_AUDIO_FRAMES)
-
-# window / sampling / near-dup analytics extras (second batch). Module
-# import only — analytics_extras self-registers into QUERIES at its end,
-# which keeps BOTH import orders safe: importing analytics_extras first
-# re-enters here while it is partially initialized, and a name import
-# (EXTRA_QUERIES) would fail at that point.
-from . import analytics_extras  # noqa: E402,F401
-from . import pipeline_extras  # noqa: E402,F401
-from . import governance_extras  # noqa: E402,F401
-from . import packing_extras  # noqa: E402,F401
-from . import search_extras  # noqa: E402,F401
-from . import mining_extras  # noqa: E402,F401
-from . import behavior_extras  # noqa: E402,F401
-from . import stats_extras  # noqa: E402,F401
-from . import transcript_extras  # noqa: E402,F401
-from . import retrieval_extras  # noqa: E402,F401
-from . import mlstats_extras  # noqa: E402,F401
-from . import events_extras  # noqa: E402,F401
-from . import tpch_extras  # noqa: E402,F401
-from . import relational_extras  # noqa: E402,F401
-from . import retrieval2_extras  # noqa: E402,F401
-from . import transcript2_extras  # noqa: E402,F401
-from . import dedup_extras  # noqa: E402,F401
-from . import tpch2_extras  # noqa: E402,F401
-from . import graph_extras  # noqa: E402,F401
-
-# batch query evaluation: the three demo queries (conjunctive /
-# single-term / phrase) answered by ONE fused plan; oracle = UNION ALL
-# of the per-query SQL, each capped like the engine (engine.ts:134)
-from .batch import q_batch_search  # noqa: E402
-
+# batch query evaluation (operators.batch.q_batch_search): the three demo
+# queries (conjunctive / single-term / phrase) answered by ONE fused plan;
+# oracle = UNION ALL of the per-query SQL, each capped like the engine
+# (engine.ts:134)
 SQL_BATCH_SEARCH = f"""
 SELECT 0 AS query_id, doc_id FROM (
   SELECT doc_id FROM (
@@ -2327,18 +2490,3 @@ SELECT 2 AS query_id, doc_id FROM (
 )
 ORDER BY query_id, doc_id
 """
-
-QUERIES["batch_search"] = (q_batch_search, SQL_BATCH_SEARCH)
-
-# serving tier (serving/local.py): a REAL persisted index built over the
-# documents table, queried through the pyarrow reader (no Spark job),
-# hash-compared against the SAME oracles as the declarative twins above
-from .serving_queries import (  # noqa: E402
-    q_serve_tier_bm25,
-    q_serve_tier_search,
-    q_serve_tier_wand,
-)
-
-QUERIES["serve_tier_search"] = (q_serve_tier_search, SQL_CONJUNCTIVE_SEARCH)
-QUERIES["serve_tier_bm25"] = (q_serve_tier_bm25, SQL_BM25_TOPK)
-QUERIES["serve_tier_wand"] = (q_serve_tier_wand, SQL_BM25_TOPK)

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .corpus_queries import (
-    QUERIES,
     SHINGLE_DF_CAP,
     SHINGLE_N,
     _SHINGLES_SQL,
@@ -108,7 +107,9 @@ ORDER BY doc_a, doc_b
 """
 
 
-QUERIES["dedup_containment_pairs"] = (
-    q_dedup_containment_pairs,
-    SQL_DEDUP_CONTAINMENT_PAIRS,
-)
+EXTRA_QUERIES = {
+    "dedup_containment_pairs": (
+        q_dedup_containment_pairs,
+        SQL_DEDUP_CONTAINMENT_PAIRS,
+    ),
+}

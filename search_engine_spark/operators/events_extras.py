@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES, _events
+from .corpus_queries import _events
 
 _US_PER_DAY = 86400000000.0
 
@@ -203,5 +203,3 @@ EXTRA_QUERIES = {
     "daily_anomalies": (q_daily_anomalies, SQL_DAILY_ANOMALIES),
     "hourly_load": (q_hourly_load, SQL_HOURLY_LOAD),
 }
-
-QUERIES.update(EXTRA_QUERIES)

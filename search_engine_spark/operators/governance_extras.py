@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES, _TOKS_SQL, _docs, _events, _tokens_df
+from .corpus_queries import _TOKS_SQL, _docs, _events, _tokens_df
 from .pipeline_extras import _G3_EXPR, _G3_SQL
 
 # --------------------------------------------------------------------------
@@ -495,7 +495,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-GOVERNANCE_QUERIES = {
+EXTRA_QUERIES = {
     "pii_redact": (q_pii_redact, SQL_PII_REDACT),
     "chunk_dedup": (q_chunk_dedup, SQL_CHUNK_DEDUP),
     "salted_rollup": (q_salted_rollup, SQL_SALTED_ROLLUP),
@@ -503,5 +503,3 @@ GOVERNANCE_QUERIES = {
     "pmi_bigrams": (q_pmi_bigrams, SQL_PMI_BIGRAMS),
     "interval_join": (q_interval_join, SQL_INTERVAL_JOIN),
 }
-
-QUERIES.update(GOVERNANCE_QUERIES)

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .corpus_queries import (
-    QUERIES,
     _TOKS_SQL,
     _docs,
     _stop_filtered_terms,
@@ -270,5 +269,3 @@ EXTRA_QUERIES = {
     "term_pagerank": (q_term_pagerank, SQL_TERM_PAGERANK),
     "term_triangles": (q_term_triangles, SQL_TERM_TRIANGLES),
 }
-
-QUERIES.update(EXTRA_QUERIES)

@@ -156,8 +156,11 @@ def build_index(
             f"{index_dir} was built by an older layout (manifest stage "
             "'staged'); rebuild into a fresh directory"
         )
-    # layout width follows the shuffle setting, not the executor count, so
-    # the same input yields the same files at any cluster size
+    # layout width follows the shuffle setting, not the executor count.
+    # repartitionByRange samples its bounds, so two builds of the same
+    # input can cut blocks at different places; what holds is that their
+    # decoded postings are identical (ROADMAP.md item 6, "A reproducible
+    # layout", would derive the cuts from the data)
     npart = shuffle_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .corpus_queries import (
-    QUERIES,
     _TOKS_SQL,
     _docs,
     _stop_filtered_terms,
@@ -447,5 +446,3 @@ EXTRA_QUERIES = {
     "simhash_pairs": (q_simhash_pairs, SQL_SIMHASH_PAIRS),
     "bpe_merge_pairs": (q_bpe_merge_pairs, SQL_BPE_MERGE_PAIRS),
 }
-
-QUERIES.update(EXTRA_QUERIES)

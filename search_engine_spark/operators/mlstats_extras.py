@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES, _TOKS_SQL, _docs, _embeddings, _tokens_df
+from .corpus_queries import _TOKS_SQL, _docs, _embeddings, _tokens_df
 from .pipeline_extras import _G3_EXPR, _G3_SQL
 
 # --------------------------------------------------------------------------
@@ -282,5 +282,3 @@ EXTRA_QUERIES = {
     "zscore_by_source": (q_zscore_by_source, SQL_ZSCORE_BY_SOURCE),
     "token_entropy": (q_token_entropy, SQL_TOKEN_ENTROPY),
 }
-
-QUERIES.update(EXTRA_QUERIES)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES, _TOKS_SQL, _docs, _tokens_df
+from .corpus_queries import _TOKS_SQL, _docs, _tokens_df
 
 # --------------------------------------------------------------------------
 # sequence packing into fixed token-budget bins
@@ -288,10 +288,8 @@ FROM tiers GROUP BY lang, bucket ORDER BY lang, bucket
 """
 
 
-PACKING_QUERIES = {
+EXTRA_QUERIES = {
     "pack_sequences": (q_pack_sequences, SQL_PACK_SEQUENCES),
     "mixture_weights": (q_mixture_weights, SQL_MIXTURE_WEIGHTS),
     "ccnet_buckets": (q_ccnet_buckets, SQL_CCNET_BUCKETS),
 }
-
-QUERIES.update(PACKING_QUERIES)

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES, _TOKS_SQL, _docs, _tokens_df
+from .corpus_queries import _TOKS_SQL, _tokens_df
 
 # --------------------------------------------------------------------------
 # intra-document repetition metrics (Gopher repetition axis)
@@ -281,11 +281,9 @@ GROUP BY dt.doc_id ORDER BY dt.doc_id
 """
 
 
-PIPELINE_QUERIES = {
+EXTRA_QUERIES = {
     "repetition_metrics": (q_repetition_metrics, SQL_REPETITION_METRICS),
     "contamination_check": (q_contamination_check, SQL_CONTAMINATION_CHECK),
     "events_json_kstats": (q_events_json_kstats, SQL_EVENTS_JSON_KSTATS),
     "unigram_logprob": (q_unigram_logprob, SQL_UNIGRAM_LOGPROB),
 }
-
-QUERIES.update(PIPELINE_QUERIES)

@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES
 from .tpch_extras import _read, _rev_units, _REV_UNITS_SQL
 
 Q18_QTY_MIN = 250  # order survives iff sum(l_quantity) > this
@@ -202,5 +201,3 @@ EXTRA_QUERIES = {
         SQL_BANDED_BRAND_REVENUE,
     ),
 }
-
-QUERIES.update(EXTRA_QUERIES)

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES, _TOKS_SQL, _docs, _tokens_df
+from .corpus_queries import _TOKS_SQL, _docs, _tokens_df
 
 GAP_TOP_TERMS = 20
 GAP_BUCKET = 1024  # doc_ids per local-gap bucket (pure function of the key)
@@ -448,5 +448,3 @@ EXTRA_QUERIES = {
     "min_pair_distance": (q_min_pair_distance, SQL_MIN_PAIR_DISTANCE),
     "utf8_byte_stats": (q_utf8_byte_stats, SQL_UTF8_BYTE_STATS),
 }
-
-QUERIES.update(EXTRA_QUERIES)

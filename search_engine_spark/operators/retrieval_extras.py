@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenizer import tokenize_expr
 from .corpus_queries import (
-    QUERIES,
     SINGLE_TERM,
     _TOKS_SQL,
     _docs,
@@ -223,5 +222,3 @@ EXTRA_QUERIES = {
     "fuzzy_search": (q_fuzzy_search, SQL_FUZZY_SEARCH),
     "filtered_search": (q_filtered_search, SQL_FILTERED_SEARCH),
 }
-
-QUERIES.update(EXTRA_QUERIES)

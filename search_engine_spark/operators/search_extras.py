@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .corpus_queries import (
-    QUERIES,
     _SQL_BM25_CORE,
     _TOKS_SQL,
     CONJ_TERMS,
@@ -472,5 +471,3 @@ EXTRA_QUERIES = {
     "posting_length_hist": (q_posting_length_hist, SQL_POSTING_LENGTH_HIST),
     "hybrid_rrf": (q_hybrid_rrf, SQL_HYBRID_RRF),
 }
-
-QUERIES.update(EXTRA_QUERIES)

@@ -26,14 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .corpus_queries import (
-    QUERIES,
     _BIGRAMS_SQL,
     _TOKS_SQL,
     _bigrams,
     _events,
     _tokens_df,
 )
-from .tpch_extras import _REV_UNITS_SQL
+from .tpch_extras import _REV_UNITS_SQL, _rev_units
 
 # --------------------------------------------------------------------------
 # TPC-H Q10 shape: returned-item revenue per customer
@@ -53,8 +52,6 @@ def q_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     as exact int64 cents × basis-points — the float product sum is
     order-dependent, the integer sum is not; one division back at the
     end."""
-    from .tpch_extras import _rev_units
-
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
         (F.col("o_orderdate") >= F.lit(Q10_DATE_LO))
         & (F.col("o_orderdate") < F.lit(Q10_DATE_HI))
@@ -335,5 +332,3 @@ EXTRA_QUERIES = {
     "iqr_outliers": (q_iqr_outliers, SQL_IQR_OUTLIERS),
     "oov_rate": (q_oov_rate, SQL_OOV_RATE),
 }
-
-QUERIES.update(EXTRA_QUERIES)

@@ -57,7 +57,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES
 from .tpch_extras import _read, _rev_units, _REV_UNITS_SQL
 
 Q7_NATION_A = "NATION_1"
@@ -757,5 +756,3 @@ EXTRA_QUERIES = {
     ),
     "sole_late_supplier": (q_sole_late_supplier, SQL_SOLE_LATE_SUPPLIER),
 }
-
-QUERIES.update(EXTRA_QUERIES)

@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES
 
 Q5_REGION = "ASIA"
 Q5_DATE_LO = "1996-01-01"
@@ -273,5 +272,3 @@ EXTRA_QUERIES = {
     ),
     "promo_revenue_share": (q_promo_revenue_share, SQL_PROMO_REVENUE_SHARE),
 }
-
-QUERIES.update(EXTRA_QUERIES)

@@ -27,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES
 from .transcript_extras import _tx
 
 CTX_BUDGET_WORDS = 128
@@ -156,5 +155,3 @@ EXTRA_QUERIES = {
     "turn_latency": (q_turn_latency, SQL_TURN_LATENCY),
     "context_window_fill": (q_context_window_fill, SQL_CONTEXT_WINDOW_FILL),
 }
-
-QUERIES.update(EXTRA_QUERIES)

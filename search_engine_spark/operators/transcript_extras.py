@@ -42,7 +42,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .corpus_queries import QUERIES
 
 # The synthesized transcript table as a DuckDB CTE body (mirrors
 # synthesize_transcripts; proven per-turn identical by transcripts_synth).
@@ -294,5 +293,3 @@ EXTRA_QUERIES = {
     "turn_jaccard": (q_turn_jaccard, SQL_TURN_JACCARD),
     "turn_verbosity": (q_turn_verbosity, SQL_TURN_VERBOSITY),
 }
-
-QUERIES.update(EXTRA_QUERIES)

@@ -193,6 +193,14 @@ class LocalIndexReader:
         here, so a refreshed reader is indistinguishable from a freshly
         opened one."""
         index_dir = self.index_dir
+        blocks_dir = os.path.join(index_dir, "blocks")
+        if any(f.startswith("part-") for f in os.listdir(blocks_dir)):
+            # root-level files beside the seg= directories: pyarrow's
+            # dataset would read their postings a second time
+            raise ValueError(
+                f"{index_dir} was built by an older layout (blocks files "
+                "outside seg= directories); rebuild into a fresh directory"
+            )
         self._snapshot = self._snapshot_token()
         with open(os.path.join(index_dir, "corpus_stats.json")) as fh:
             self.corpus_stats = json.load(fh)
@@ -205,8 +213,7 @@ class LocalIndexReader:
             format="parquet", partitioning="hive",
         )
         self._blk_ds = ds.dataset(
-            os.path.join(index_dir, "blocks"),
-            format="parquet", partitioning="hive",
+            blocks_dir, format="parquet", partitioning="hive",
         )
         self._tombstones = self._load_tombstones()
         self._df_map = self._load_term_stats()
@@ -890,15 +897,19 @@ class LocalIndexReader:
             for w in words
             if not is_stop_word(w, self.config.stop_words)
         })
-        empty_cols = BM25_RESULT_COLUMNS if with_results else BM25_COLUMNS
-        empty = pd.DataFrame(columns=empty_cols)
+
+        def empty() -> pd.DataFrame:  # built only on the paths that return it
+            return pd.DataFrame(
+                columns=BM25_RESULT_COLUMNS if with_results else BM25_COLUMNS
+            )
+
         self.last_wand_stats = {
             "terms": 0, "blocks_total": 0, "surviving_blocks": 0,
             "global_surviving_blocks": 0, "blocks_read": 0,
             "candidates": 0, "theta": 0.0, "fallback": None,
         }
         if not terms:
-            return empty
+            return empty()
         # adaptive exhaustive fallback, cached per query shape: when a
         # previous run of this (terms, conjunctive, k) shape proved that
         # NO block is prunable (flat block maxima — the bench corpus's
@@ -925,17 +936,17 @@ class LocalIndexReader:
             if (d := self._df_map.get(t)) is not None
         }
         if not idf:
-            return empty
+            return empty()
         m_terms, m_first, m_max, m_bmp = self._block_meta(sorted(idf))
         m_idf = np.fromiter(
             (idf[t] for t in m_terms), dtype="float64", count=len(m_terms)
         )
         m_ub = m_idf * (k1 + 1.0) * m_bmp
         if len(m_ub) == 0:
-            return empty
+            return empty()
         scorable = sorted({*m_terms})
         if conjunctive and len(scorable) < len(terms):
-            return empty  # same as search_bm25: count can never reach
+            return empty()  # same as search_bm25: count can never reach
         g_ub = {t: 0.0 for t in scorable}
         for t, u in zip(m_terms, m_ub):
             if u > g_ub[t]:
@@ -1041,7 +1052,7 @@ class LocalIndexReader:
                 global_surviving_blocks=global_surv,
                 blocks_read=len(seed_keys | surv_keys), theta=theta,
             )
-            return empty
+            return empty()
         cand = np.unique(np.concatenate(
             [a[0] for a in surv_arrays.values()]
         ))

@@ -134,12 +134,12 @@ def test_topk_is_take_ordered(engine):
 
 
 @pytest.mark.parametrize("name", sorted(__import__(
-    "search_engine_spark.operators.corpus_queries", fromlist=["QUERIES"]
+    "search_engine_spark.operators.registry", fromlist=["QUERIES"]
 ).QUERIES))
 def test_corpus_query_plans_jvm_side(spark, name):
     """Every driver-contract operator stays JVM-side or Arrow-vectorized —
     no row-at-a-time Python anywhere (SURVEY.md §7.3)."""
-    from search_engine_spark.operators.corpus_queries import QUERIES
+    from search_engine_spark.operators.registry import QUERIES
 
     fn, _sql = QUERIES[name]
     plan = plan_of(fn(spark, SF_DIR))

@@ -196,3 +196,28 @@ def test_positions_cache_bound(carl):
         assert len(reader._pos_cache) <= 2
     finally:
         sl.POSITIONS_CACHE_TERMS = old
+
+
+def test_refuses_blocks_files_outside_segments(carl, tmp_path):
+    """An index whose ``blocks/`` holds a ``part-*`` file beside the
+    ``seg=`` directories (the layout older refresh/compaction cycles
+    left behind) is refused at open and at refresh — pyarrow would read
+    that file's postings a second time — and fleet shard views, which
+    open through the same reader, inherit the refusal."""
+    import shutil
+
+    from search_engine_spark.serving.fleet import FleetReader, make_term_shards
+
+    _, idx = carl
+    copy = tmp_path / "idx"
+    shutil.copytree(idx, copy)
+    reader = LocalIndexReader(str(copy), config=CFG)
+    seg_file = next((copy / "blocks").glob("seg=*/part-*.parquet"))
+    shutil.copy(seg_file, copy / "blocks" / seg_file.name)
+    with pytest.raises(ValueError, match="rebuild into a fresh directory"):
+        LocalIndexReader(str(copy), config=CFG)
+    with pytest.raises(ValueError, match="outside seg= directories"):
+        reader.refresh(force=True)
+    shards = make_term_shards(str(copy), str(tmp_path / "shards"), n_shards=1)
+    with pytest.raises(ValueError, match="outside seg= directories"):
+        FleetReader(shards, config=CFG)
