@@ -20,8 +20,9 @@ from search_engine_spark.operators.registry import QUERIES  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full BM25 pipeline (tokenize → tf/df/dl/avgdl → score →
-    top-k) over sf0.001 documents."""
+    """Flagship: BM25 top-k over sf0.001 documents, answered by the
+    ``SearchEngine`` over an index built from them (build → tf/df/dl/
+    avgdl → score → top-k)."""
     from search_engine_spark.operators.corpus_queries import q_bm25_topk
 
     return q_bm25_topk(spark, "/root/testdata/sf0.001")

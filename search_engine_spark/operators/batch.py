@@ -331,15 +331,14 @@ def search_many(
 
 
 # driver-gate demo batch: one conjunctive, one single-term, one phrase
-# query evaluated by the SAME fused machinery, over a term_positions
-# frame derived from the documents table (quote-free guard mirrors
-# q_phrase_search — tokenizer quote handling vs the regex oracle)
+# query evaluated by the SAME fused machinery as search_many, over a
+# term_positions frame derived in-plan from the documents table, not a
+# persisted index (quote-free guard as in q_phrase_search — tokenizer
+# quote handling vs the regex oracle)
 def _batch_demo_queries() -> list[str]:
     """Built from the SAME constants the oracle SQL interpolates
     (corpus_queries.CONJ_TERMS/SINGLE_TERM/PHRASE) so the two sides of
-    the batch_search gate can never drift. Lazy import — corpus_queries
-    imports this module at its tail, so a module-level import here would
-    be circular when batch is imported first."""
+    the batch_search gate can never drift."""
     from .corpus_queries import CONJ_TERMS, PHRASE, SINGLE_TERM
 
     return [" ".join(CONJ_TERMS), SINGLE_TERM, f'"{PHRASE[0]} {PHRASE[1]}"']

@@ -25,6 +25,10 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenizer import is_stop_word, tokenize
 
+# Dataset.limit takes a Java int; no Spark result holds more rows, so a
+# larger k ("all matches") is clamped here
+LIMIT_MAX = 2**31 - 1
+
 
 def query_terms(engine, text: str) -> list[str]:
     words, _ = tokenize(text)
@@ -109,4 +113,6 @@ def bm25_topk(
         per_doc = per_doc.filter(F.col("n_terms") == len(terms))
     if allowed is not None:
         per_doc = per_doc.join(allowed, "doc_id", "left_semi")
-    return per_doc.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return per_doc.orderBy(F.desc("score"), F.asc("doc_id")).limit(
+        min(k, LIMIT_MAX)
+    )

@@ -1,12 +1,14 @@
-"""Self-contained corpus operators over the driver's ``documents`` /
-``embeddings`` tables, each with a DuckDB-oracle SQL twin.
+"""Corpus operators over the driver's ``documents`` / ``embeddings``
+tables, each with a DuckDB-oracle SQL twin.
 
-These re-express the engine's operator inventory (SURVEY.md §2) plus the
-training-data pipeline operators (dedup, similarity, text analysis) as
-single declarative DataFrame programs over the raw parquet — no persisted
-index — so the driver can verify them against ANSI SQL on the same files.
-The persisted-index path is exercised by tests/bench; semantics here are
-identical.
+The search entries (conjunctive, single-term, BM25, filtered and
+projected BM25, block-max WAND) answer through the shipped
+:class:`.search.SearchEngine` over a persisted index built from
+``documents`` (engine_queries.py); their oracles below are ANSI SQL over
+the raw parquet, so the driver checks the engine users run. The other
+operators (phrase adjacency, term statistics, dedup, similarity, text
+analysis, the training-data pipeline) are single declarative DataFrame
+programs over the raw parquet.
 
 Every computed column is aliased identically in the Spark plan and the SQL
 string; floats are rounded explicitly on both sides.
@@ -20,6 +22,15 @@ from pyspark.sql import functions as F
 from ..config import DEMO_STOP_WORDS
 from ..functions.suggest import deletion_variants as _deletion_variants
 from ..functions.tokenizer import duckdb_tokenize_sql, tokenize_expr
+from .engine_queries import (
+    q_bm25_scores_all,
+    q_bm25_topk,
+    q_bm25_topk_projected,
+    q_conjunctive_search,
+    q_filtered_bm25,
+    q_single_term_topk,
+    q_wand_topk,
+)
 from .multimodal import (
     SQL_MULTIMODAL_AUDIO_DECODE,
     SQL_MULTIMODAL_AUDIO_FRAMES,
@@ -115,23 +126,8 @@ SELECT term, count(*) AS df FROM (
 
 # --------------------------------------------------------------------------
 # Q3 conjunctive AND + Q4 single-term + Q12 top-k by doc order
+# (SearchEngine.search, engine_queries.py)
 # --------------------------------------------------------------------------
-
-def q_conjunctive_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _tokens_df(spark, sf_dir)
-    exploded = toks.select("doc_id", F.explode("toks").alias("term"))
-    return (
-        exploded.filter(F.col("term").isin(CONJ_TERMS))
-        .select("doc_id", "term")
-        .distinct()
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_terms"))
-        .filter(F.col("n_terms") == len(CONJ_TERMS))
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(100)
-    )
-
 
 _terms_in = ", ".join(f"'{t}'" for t in CONJ_TERMS)
 SQL_CONJUNCTIVE_SEARCH = f"""
@@ -141,17 +137,6 @@ SELECT doc_id FROM (
   ) WHERE term IN ({_terms_in}) GROUP BY doc_id
 ) WHERE n_terms = {len(CONJ_TERMS)} ORDER BY doc_id LIMIT 100
 """
-
-
-def q_single_term_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _tokens_df(spark, sf_dir)
-    return (
-        toks.filter(F.array_contains("toks", SINGLE_TERM))
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(100)
-    )
-
 
 SQL_SINGLE_TERM_TOPK = f"""
 SELECT doc_id FROM documents
@@ -164,6 +149,8 @@ ORDER BY doc_id LIMIT 100
 # Q5/Q6 phrase adjacency (positional index + shifted intersection)
 # --------------------------------------------------------------------------
 
+# stays declarative: the engine caps phrase candidates at INTERSECT_CAP =
+# 100 (engine.ts:134), this oracle has no cap (306 rows at sf0.1)
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True positional-operator implementation: per-doc positions of the
     two phrase words, second shifted by -1, array_intersect non-empty
@@ -204,57 +191,9 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# BM25 (full pipeline: tf, df, dl, avgdl, idf, score)
+# BM25 (full pipeline: tf, df, dl, avgdl, idf, score) — the oracles of
+# the SearchEngine.search_bm25 entries (engine_queries.py)
 # --------------------------------------------------------------------------
-
-def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _tokens_df(spark, sf_dir)
-    toks = toks.withColumn("dl", F.size("toks"))
-    n_docs = toks.count()
-    avgdl_row = toks.agg(F.avg("dl").alias("a")).first()
-    avgdl = float(avgdl_row["a"])
-
-    tf = (
-        toks.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(CONJ_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
-    )
-    df_stats = tf.groupBy("term").agg(F.count("*").alias("df"))
-    j = tf.join(F.broadcast(df_stats), "term")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    score = (
-        idf
-        * F.col("tf").cast("double")
-        * (BM25_K1 + 1.0)
-        / (
-            F.col("tf").cast("double")
-            + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))
-        )
-    )
-    return (
-        j.select("doc_id", "term", score.alias("s"))
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("term", "s"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["s"],
-                ),
-                6,
-            ).alias("score"),
-            F.count("*").alias("n_terms"),
-        )
-    )
-
-
-def q_bm25_scores_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _bm25_scores(spark, sf_dir).orderBy("doc_id")
-
 
 def _bm25_sql_core(terms_in: str) -> str:
     """Exhaustive-BM25 CTE chain for a literal term list (shared by the
@@ -291,45 +230,10 @@ _SQL_BM25_CORE = _bm25_sql_core(_terms_in)
 
 SQL_BM25_SCORES_ALL = _SQL_BM25_CORE + "SELECT doc_id, score, n_terms FROM per_doc ORDER BY doc_id"
 
-
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _bm25_scores(spark, sf_dir)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(100)
-    )
-
-
 SQL_BM25_TOPK = _SQL_BM25_CORE + (
     "SELECT doc_id, score, n_terms FROM per_doc "
     "ORDER BY score DESC, doc_id ASC LIMIT 100"
 )
-
-
-def q_bm25_topk_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-k with the user-facing result projection: ranked ids
-    join back to the documents table for metadata + a leading text
-    slice — the fetch-after-slice shape of the reference's
-    ``SearchResult`` {title, introduction, url}
-    (/root/reference/src/engine.ts:141-150) on the corpus tables, which
-    carry (lang, source, text) instead. The engine-side twin
-    (``SearchEngine.search_bm25(with_results=True)``) additionally
-    builds the quirk-faithful snippet in an Arrow stage and is
-    pytest-gated (tests/test_ranked_filtered.py); this oracle pins the
-    projection join + ordering."""
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", "lang", "source",
-        F.substring("text", 1, 120).alias("introduction"),
-    )
-    return (
-        _bm25_scores(spark, sf_dir)
-        .join(docs, "doc_id")
-        .select("doc_id", "score", "n_terms", "lang", "source",
-                "introduction")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(100)
-    )
-
 
 SQL_BM25_TOPK_PROJECTED = _SQL_BM25_CORE + (
     "SELECT p.doc_id, p.score, p.n_terms, d.lang, d.source, "
@@ -337,27 +241,6 @@ SQL_BM25_TOPK_PROJECTED = _SQL_BM25_CORE + (
     "FROM per_doc p JOIN documents d USING (doc_id) "
     "ORDER BY p.score DESC, p.doc_id ASC LIMIT 100"
 )
-
-
-def q_filtered_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-filtered ranked retrieval: BM25 top-k restricted to
-    ``lang = 'en'`` docs. The gate is a semi-join on the filtered doc-id
-    set applied BEFORE the top-k slice (fill k from the filtered set);
-    scores keep full-corpus statistics (df/avgdl/N) — filtering narrows
-    which docs are eligible, not what the corpus looks like. Twin of
-    ``SearchEngine.search_bm25(where=...)`` (operators/search.py), the
-    most common real-world query shape on transcript corpora
-    ("assistant turns only", "lang = en")."""
-    allowed = (
-        _docs(spark, sf_dir).filter(F.col("lang") == "en").select("doc_id")
-    )
-    return (
-        _bm25_scores(spark, sf_dir)
-        .join(allowed, "doc_id", "left_semi")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(100)
-    )
-
 
 SQL_FILTERED_BM25 = _SQL_BM25_CORE + (
     "SELECT doc_id, score, n_terms FROM per_doc "
@@ -368,143 +251,6 @@ SQL_FILTERED_BM25 = _SQL_BM25_CORE + (
 
 WAND_TERMS = ["scan", "sort"]  # distinct from CONJ_TERMS; df skew differs
 WAND_K = 10
-WAND_RANGE = 8  # doc_ids per aligned block; ~63 ranges on the 500-doc SFs
-WAND_SEED_RANGES = 16  # θ seeded from the 16 highest-bound ranges
-
-
-def q_wand_topk(
-    spark: SparkSession, sf_dir: str, _diag: dict | None = None
-) -> DataFrame:
-    """Doc-aligned block-max WAND top-k, driver-checked against
-    EXHAUSTIVE BM25.
-
-    The oracle twin is the exhaustive scorer (same SQL core as
-    ``bm25_topk``, over ``WAND_TERMS``) — the pruning must therefore be
-    LOSSLESS or the driver's row/hash compare fails. This is the aligned
-    refinement of Block-Max WAND (Ding & Suel, SIGIR'11): blocks are
-    doc_id ranges shared across terms (``block_id = doc_id div RANGE``),
-    so a range's upper bound is Σ over query terms of that range's own
-    block-max contribution — tighter than the classic
-    per-term-global-max bound, and every doc lands in exactly one range,
-    hence ``score(d) ≤ range_bound(range(d))`` and no top-k doc can be
-    pruned. Mirrors ``operators/wand.py`` over the engine's persisted
-    blocks table (reference early-exit analogue,
-    /root/reference/src/engine.ts:391-431); here the blocks are derived
-    in-plan from ``documents`` so the oracle stays pure ANSI SQL.
-
-    1. postings per (term, doc) with the BM25 contribution
-       ``idf*(k1+1) * tf/(tf + k1*(1-b+b*dl/avgdl))``,
-    2. per (term, range) block max; per-range bound = Σ_t block_max,
-    3. θ seeded by exact-scoring each term's best block, minus 1e-6 so
-       the 6-decimal output rounding can never over-prune a boundary tie,
-    4. ranges with bound < θ are discarded (a literal filter + one tiny
-       semi-join — at scale, with the index doc_id-partitioned on the
-       same ranges, this is partition pruning: pruned ranges are never
-       read),
-    5. exact BM25 on surviving docs only, same deterministic term-ordered
-       fold as ``_bm25_scores`` → identical ranks AND scores.
-    """
-    import math as _math
-
-    toks = _tokens_df(spark, sf_dir).withColumn("dl", F.size("toks"))
-    n_docs = float(toks.count())
-    avgdl = float(toks.agg(F.avg("dl").alias("a")).first()["a"])
-
-    tf = (
-        toks.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(WAND_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
-    )
-    df_map = {
-        r["term"]: r["df"]
-        for r in tf.groupBy("term").agg(F.count("*").alias("df")).collect()
-    }
-    present = sorted(df_map)
-    if not present:
-        return spark.createDataFrame(
-            [], "doc_id long, score double, n_terms long"
-        )
-
-    def _idf(t: str) -> float:
-        d = df_map[t]
-        return _math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))
-
-    idf_col = F.lit(0.0)
-    for t in present:
-        idf_col = F.when(F.col("term") == t, F.lit(_idf(t))).otherwise(idf_col)
-    contrib = idf_col * F.col("tf").cast("double") * (BM25_K1 + 1.0) / (
-        F.col("tf").cast("double")
-        + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))
-    )
-    tfb = tf.withColumn("c", contrib).withColumn(
-        "block_id", (F.col("doc_id") / F.lit(WAND_RANGE)).cast("long")
-    )
-    blocks = tfb.groupBy("term", "block_id").agg(F.max("c").alias("bmax"))
-    bounds = blocks.groupBy("block_id").agg(F.sum("bmax").alias("bound"))
-
-    def _exact(cand: DataFrame) -> DataFrame:
-        """Exhaustive-identical scoring of candidate doc_ids (same ordered
-        fold + round(6) as ``_bm25_scores``)."""
-        return (
-            tfb.join(cand.hint("broadcast"), "doc_id")
-            .select("doc_id", "term", F.col("c").alias("s"))
-            .groupBy("doc_id")
-            .agg(
-                F.round(
-                    F.aggregate(
-                        F.array_sort(F.collect_list(F.struct("term", "s"))),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["s"],
-                    ),
-                    6,
-                ).alias("score"),
-                F.count("*").alias("n_terms"),
-            )
-        )
-
-    # θ seed: exact-score the top seed ranges by their own bound — the
-    # k-th best score among them lower-bounds the global k-th, and since
-    # high-bound ranges are where top docs live, θ lands near the truth
-    seed_ids = (
-        tfb.join(
-            bounds.orderBy(F.desc("bound"), F.asc("block_id"))
-            .limit(WAND_SEED_RANGES)
-            .select("block_id")
-            .hint("broadcast"),
-            "block_id",
-        )
-        .select("doc_id")
-        .distinct()
-    )
-    kth = (
-        _exact(seed_ids)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(WAND_K)
-        .collect()
-    )
-    # −1e-6 guard: θ compares against ROUNDED seed scores; the true k-th
-    # unrounded score can sit up to 5e-7 below its rounded value
-    theta = kth[-1]["score"] - 1e-6 if len(kth) >= WAND_K else 0.0
-
-    surviving = bounds.filter(F.col("bound") >= F.lit(theta)).select(
-        "block_id"
-    )
-    cand = (
-        tfb.join(surviving.hint("broadcast"), "block_id")
-        .select("doc_id")
-        .distinct()
-    )
-    if _diag is not None:  # test hook: prove the filter actually prunes
-        _diag["blocks_total"] = bounds.count()
-        _diag["blocks_survived"] = surviving.count()
-        _diag["theta"] = theta
-    return (
-        _exact(cand)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(WAND_K)
-    )
-
 
 SQL_WAND_TOPK = _bm25_sql_core(
     ", ".join(f"'{t}'" for t in WAND_TERMS)

@@ -3,10 +3,11 @@
 ``QUERIES`` is what ``__spark_entry__.queries()`` / ``oracle_sql()`` and the
 oracle tests sweep, in this order: the corpus operators (the first 50
 names, which the driver's correctness check runs), the ``*_extras``
-families, then the entries that exercise the shipped engine — the fused
-batch plan and the three serve-tier twins, which answer through a real
-persisted index and are hash-compared against the same oracles as their
-declarative twins. Modules export their entries; only this module
+families, then the fused batch plan and the three serve-tier twins.
+The search, BM25 and WAND entries among the first 50 and the serve-tier
+twins answer through a real persisted index (engine_queries.py): the
+Spark ``SearchEngine`` and the in-process reader, hash-compared against
+the same SQL oracles. Modules export their entries; only this module
 assembles them, so any of them can be imported first.
 """
 
@@ -40,7 +41,7 @@ from .corpus_queries import (
     SQL_BM25_TOPK,
     SQL_CONJUNCTIVE_SEARCH,
 )
-from .serving_queries import (
+from .engine_queries import (
     q_serve_tier_bm25,
     q_serve_tier_search,
     q_serve_tier_wand,

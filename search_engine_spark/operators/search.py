@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 from .. import fsio
 from ..config import EngineConfig
 from ..functions.tokenizer import is_stop_word, tokenize
+from .bm25 import LIMIT_MAX
 from .index_build import decode_blocks
 from .scoring import make_score_intro_udf
 
@@ -403,7 +404,7 @@ class SearchEngine:
                 "url",
             )
             .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(max_count)
+            .limit(min(max_count, LIMIT_MAX))
         )
 
     def _allowed_ids(self, where) -> Optional[DataFrame]:

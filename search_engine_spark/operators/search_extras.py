@@ -372,16 +372,16 @@ RRF_TOPK = 10
 def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: the BM25 top-20 (lexical) and cosine top-20
     (vector, query = embedding 0, vec_id aligned with doc_id) fused by
-    reciprocal-rank fusion ``Σ 1/(60+rank)``. Both input rankings are the
-    engine's existing scale paths (pushed postings scan + broadcast
-    stats; broadcast query vector); the fusion itself joins two ≤20-row
-    frames — driver-trivial at any corpus size. Ranks carried in the
-    output so the fusion is auditable."""
-    from .corpus_queries import _bm25_scores
+    reciprocal-rank fusion ``Σ 1/(60+rank)``. The lexical ranking is the
+    engine's ``SearchEngine.search_bm25`` (engine_queries.bm25_ranked),
+    the vector one uses a broadcast query vector; the fusion itself
+    joins two ≤20-row frames — driver-trivial at any corpus size. Ranks
+    carried in the output so the fusion is auditable."""
+    from .engine_queries import bm25_ranked
 
     w_lex = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     lex = (
-        _bm25_scores(spark, sf_dir)
+        bm25_ranked(spark, sf_dir)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(RRF_LIST)
         .withColumn("lex_rank", F.row_number().over(w_lex).cast("long"))

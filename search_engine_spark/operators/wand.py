@@ -38,7 +38,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .bm25 import query_terms
+from .bm25 import LIMIT_MAX, query_terms
 from .index_build import decode_blocks
 
 
@@ -329,14 +329,16 @@ def _range_refine(blocks, survivors, present, df_map, n, k1, theta):
     candidate block's doc-id range — evaluated on a fixed ≤4096-bucket
     grid so the per-bucket maxima tables are size-bounded constants.
 
-    Correctness (matches the aligned-range proof in
-    corpus_queries.q_wand_topk, here for unaligned per-term blocks): a
-    doc d with score(d) ≥ θ sits, for its argmax-contribution term t*,
-    in block B with ub_own(B) ≥ c_{t*}(d); d's bucket g is covered by B,
-    and for every other term t' holding d, bucketmax[t', g] ≥ ub of the
-    t'-block containing d ≥ c_{t'}(d). Hence
+    Correctness: score(d) = Σ_t c_t(d) over the query terms t holding
+    d, and every doc lies in exactly one bucket g. Take a doc d with
+    score(d) ≥ θ and any block B of a term t* holding d. B covers g and
+    ub_own(B) ≥ c_{t*}(d). For every other term t' holding d, the
+    t'-block containing d also covers g, so
+    bucketmax[t', g] ≥ its ub ≥ c_{t'}(d); terms not holding d add
+    c = 0 ≤ bucketmax. Hence
     ub_own(B) + Σ_{t'≠t*} bucketmax[t', g] ≥ score(d) ≥ θ and B survives
-    ``best = max_g (ub_own + sum_other(g)) ≥ θ``. The per-bucket maxima
+    ``best = max_g (ub_own + sum_other(g)) ≥ θ``: every block holding a
+    doc that can reach the top k is decoded. The per-bucket maxima
     MUST be computed over ALL blocks of the query terms (not just global
     survivors): a globally-pruned t'-block can still hold d's t'
     posting. Composing with the global filter stays lossless because
@@ -476,7 +478,9 @@ def wand_topk(engine, text: str, k: int = 10, seed_blocks: int = 2,
     scored = _exact_scores(engine, present, cand, stats)
     if conjunctive:
         scored = scored.filter(F.col("n_terms") == len(present))
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(
+        min(k, LIMIT_MAX)
+    )
 
 
 def wand_prune_stats(engine, text: str, k: int = 10, seed_blocks: int = 2,

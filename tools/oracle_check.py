@@ -4,6 +4,9 @@ compare row count, column names, and order-insensitive values.
 
 Usage: python tools/oracle_check.py [--strict] [--json OUT] [sf_dir] [name ...]
 
+Each entry's line ends with its wall seconds (Spark plan, actions and
+the oracle query); the sweep's total prints before the failure count.
+
 ``--json OUT`` additionally writes one record per checked query to OUT in
 the driver's CORRECTNESS_r{N}.json schema ({name: {rows_match,
 schema_match, hash_match, spark_rows, oracle_rows, err}}), so a full
@@ -24,6 +27,7 @@ from __future__ import annotations
 
 import math
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -114,9 +118,15 @@ def main():
         print(f"known: {sorted(qs)}", file=sys.stderr)
         sys.exit(2)
     failures = 0
+    sweep_s = 0.0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
+
+        def took() -> str:
+            return f" {time.perf_counter() - t0:.1f}s"
+
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
@@ -124,7 +134,7 @@ def main():
                 if name not in oracles:
                     n = sdf.count()
                     records[name] = {"rows_only": True, "spark_rows": n}
-                    print(f"{name:28s} rows-only: {n} rows")
+                    print(f"{name:28s} rows-only: {n} rows{took()}")
                     continue
                 s_pdf = sdf.toPandas()
                 d_pdf = con.execute(oracles[name]).fetch_df()
@@ -146,7 +156,7 @@ def main():
                     f"{name:28s} {'OK ' if ok else 'FAIL'} rows"
                     f" {len(s_pdf)}/{len(d_pdf)}"
                     f" cols={'ok' if ok_cols else (list(s_pdf.columns), list(d_pdf.columns))}"
-                    f" hash={'ok' if sh == dh else 'MISMATCH'}"
+                    f" hash={'ok' if sh == dh else 'MISMATCH'}{took()}"
                 )
                 if sh != dh and ok_cols and ok_rows:
                     order = sorted(s_pdf.columns)
@@ -168,7 +178,7 @@ def main():
                 records[name] = {
                     "rows_only": True, "spark_rows": len(s_rows),
                 }
-                print(f"{name:28s} rows-only: {len(s_rows)} rows")
+                print(f"{name:28s} rows-only: {len(s_rows)} rows{took()}")
                 continue
             cur = con.execute(oracles[name])
             d_cols = [d[0] for d in cur.description]
@@ -195,7 +205,7 @@ def main():
             print(
                 f"{name:28s} {status} rows {len(s_norm)}/{len(d_norm)}"
                 f" cols={'ok' if ok_cols else (s_cols, d_cols)}"
-                f" vals={'ok' if ok_vals else 'MISMATCH'}"
+                f" vals={'ok' if ok_vals else 'MISMATCH'}{took()}"
             )
             if not ok_vals:
                 diff_s = [r for r in s_norm if r not in d_norm][:3]
@@ -212,12 +222,15 @@ def main():
                 "oracle_rows": None,
                 "err": f"{type(e).__name__}: {e}"[:500],
             }
-            print(f"{name:28s} ERROR {type(e).__name__}: {e}")
+            print(f"{name:28s} ERROR{took()} {type(e).__name__}: {e}")
+        finally:
+            sweep_s += time.perf_counter() - t0
     if json_out:
         import json
 
         Path(json_out).write_text(json.dumps(records, indent=2) + "\n")
         print(f"wrote {len(records)} records to {json_out}")
+    print(f"SWEEP: {sweep_s:.1f}s over {len(records)} entries")
     print("FAILURES:", failures)
     sys.exit(1 if failures else 0)
 
