@@ -513,15 +513,15 @@ def run(master: str | None = None, sf_dir: str | None = None,
         }
         shutil.rmtree(sdir, ignore_errors=True)
 
-    # WAND pruning evidence: pruned-block fraction per θ round (round 0 =
-    # seed θ, later rounds = iterative tightening) for three query
-    # shapes, each with the range-aware (true Block-Max) bound next to
-    # the global bound (operators/wand.py; equality to exhaustive BM25
-    # is pytest-gated in test_wand). The synthetic corpus is
-    # deliberately worst-case for pruning — a ~50-term vocabulary where
-    # every doc scores near-max for every head term — so the
-    # all-head-terms shape honestly prunes ~0 while the asymmetric and
-    # single-term shapes show the bounds doing real work.
+    # WAND pruning evidence: the Spark WAND plan (θ, blocks total and
+    # surviving under the range-aware and the global bound; the planner
+    # is operators/block_bounds.py, shared with the serve tier) for three
+    # query shapes; equality to exhaustive BM25 is pytest-gated in
+    # test_wand. The synthetic corpus is deliberately worst-case for
+    # pruning — a ~50-term vocabulary where every doc scores near-max for
+    # every head term — so the all-head-terms shape honestly prunes ~0
+    # while the asymmetric and single-term shapes show the bounds doing
+    # real work.
     # BENCH_WAND=0 skips the diagnostic (used by the scaling harness,
     # whose metric is build throughput — the three prune-stat probes
     # only add wall time at the 2-core N level)
@@ -539,14 +539,24 @@ def run(master: str | None = None, sf_dir: str | None = None,
             .collect()
         )
         w_common, w_rare = ts_rows[0]["term"], ts_rows[-1]["term"]
+
+        def plan(q: str) -> dict:
+            st = wand_prune_stats(engine, q, k=10)
+            total = max(1, st["blocks_total"])
+            return {
+                **st,
+                "pruned_fraction": round(
+                    1.0 - st["surviving_blocks"] / total, 4
+                ),
+                "global_pruned_fraction": round(
+                    1.0 - st["global_surviving_blocks"] / total, 4
+                ),
+            }
+
         wand_stats = {
-            "head_terms": wand_prune_stats(
-                engine, "filter join window", k=10
-            ),
-            "asymmetric": wand_prune_stats(
-                engine, f"{w_common} {w_rare}", k=10
-            ),
-            "single_term": wand_prune_stats(engine, w_common, k=10),
+            "head_terms": plan("filter join window"),
+            "asymmetric": plan(f"{w_common} {w_rare}"),
+            "single_term": plan(w_common),
         }
 
     # two-cluster-size scaling evidence, measured separately by
@@ -640,7 +650,7 @@ def compact_summary(out: dict, detail_file: str | None) -> dict:
     self-contained JSON — headline metric, per-query p50/p95, build
     best-of + all reps, batch/stream amortized ms/query, scaling
     efficiency + provenance commit. Bulky diagnostics (wand pruning
-    rounds, per-batch arrays) live in the sidecar ``detail_file``."""
+    plans, per-batch arrays) live in the sidecar ``detail_file``."""
     d = out["detail"]
     lat = d.get("latency") or {}
     summary: dict = {

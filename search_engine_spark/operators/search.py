@@ -95,8 +95,8 @@ class SearchEngine:
         self._term_stats: Optional[DataFrame] = None
         # persisted (doc_id) frames per metadata predicate, LRU-bounded:
         # a filtered query evaluates its docs filter ONCE per engine
-        # snapshot, not once per action that consumes it (WAND θ rounds +
-        # final semi-join would otherwise each re-scan docs), and
+        # snapshot, not once per action that consumes it (the WAND seed
+        # and final semi-joins would otherwise each re-scan docs), and
         # repeated queries with the same filter reuse the cached ids
         self._allowed_cache: "OrderedDict[str, DataFrame]" = OrderedDict()
 
@@ -231,38 +231,15 @@ class SearchEngine:
         # then inline idf as literals — zero stats job per query. Bounded
         # by DRIVER_STATS_CAP; beyond it the broadcast-join path remains.
         self._stats_map: Optional[dict] = None
-        self._block_max_map: Optional[dict] = None
-        self._block_min_map: Optional[dict] = None
-        self._block_cnt_map: Optional[dict] = None
         if n_vocab <= DRIVER_STATS_CAP:
             self._stats_map = {
                 r["term"]: int(r["df"])
                 for r in self._term_stats.select("term", "df").collect()
             }
-            # per-term max/min block partial + block count: WAND's
-            # upper-bound stage then needs NO per-query stats collect —
-            # the driver maps are vocab-sized and share the
-            # DRIVER_STATS_CAP bound (min + count feed the adaptive
-            # exhaustive-fallback check, wand.py). Pinned values carry
-            # the avgdl-drift correction (wand.block_max_eff) against
-            # THIS snapshot's corpus_stats — consistent with the
-            # per-query exact scorer until the next re-warm.
-            from .wand import block_max_eff
-
+            # the blocks table WAND plans from: a pinned snapshot
+            # handle, like term_stats
             self._blocks = self.blocks().persist()
-            bmp_eff = block_max_eff(self._blocks, self.corpus_stats)
-            per_term = (
-                self._blocks.groupBy("term")
-                .agg(
-                    F.max(bmp_eff).alias("mx"),
-                    F.min(bmp_eff).alias("mn"),
-                    F.count(F.lit(1)).alias("cnt"),
-                )
-                .collect()
-            )
-            self._block_max_map = {r["term"]: float(r["mx"]) for r in per_term}
-            self._block_min_map = {r["term"]: float(r["mn"]) for r in per_term}
-            self._block_cnt_map = {r["term"]: int(r["cnt"]) for r in per_term}
+            self._blocks.count()
         if pin_docs:
             # pre-partitioned AND pre-sorted on doc_id so the per-query
             # candidates->docs join needs NO docs-side exchange or sort
@@ -415,8 +392,8 @@ class SearchEngine:
         evaluate it against the pinned docs projection; cold, the
         predicate pushes into the docs parquet scan. The result is
         persisted and LRU-cached per predicate (ALLOWED_CACHE_SIZE):
-        every action that consumes it — WAND θ rounds, the final
-        semi-join, repeated queries with the same filter — reads the
+        every action that consumes it — the WAND seed and final
+        semi-joins, repeated queries with the same filter — reads the
         cached ids instead of re-scanning docs. Invalidated on
         re-warm (snapshot advance)."""
         if where is None:

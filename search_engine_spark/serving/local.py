@@ -46,7 +46,6 @@ in compaction keeps directories consistent at every instant.
 from __future__ import annotations
 
 import json
-import math
 import os
 from collections import OrderedDict
 from typing import Iterable, Optional, Sequence
@@ -59,6 +58,12 @@ import pyarrow.dataset as ds
 
 from ..config import EngineConfig
 from ..functions.tokenizer import is_stop_word, tokenize
+from ..operators.block_bounds import (
+    WandPlanner,
+    drift_corrected,
+    empty_stats,
+    idf,
+)
 from ..operators.index_build import decode_block_arrays
 from ..operators.scoring import score_page
 from ..operators.search import INTERSECT_CAP, _quote_pairs
@@ -656,8 +661,7 @@ class LocalIndexReader:
             ids, tf, dl = arrays[t]
             tf = tf.astype("float64")
             dl = dl.astype("float64")
-            idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            sc = idf * tf * (k1 + 1.0) / (
+            sc = idf(n, df) * tf * (k1 + 1.0) / (
                 tf + k1 * (1.0 - b + b * dl / avgdl)
             )
             id_chunks.append(ids)
@@ -796,15 +800,10 @@ class LocalIndexReader:
         per block, so a term's entry is df/block_size rows, read WITHOUT
         the array columns.
 
-        The cached bound is ``block_max_partial · max(1, avgdl_now /
-        bake_avgdl)`` — the numpy twin of ``operators.wand.block_max_eff``
-        (see its docstring for the monotonicity proof): the baked partial
-        under-estimates true contributions whenever this reader's corpus
-        avgdl exceeds the one the block was baked with (stats refreshed
-        ahead of a block re-bake), which would make pruning lossy. The
-        reader's avgdl is a constant of the open snapshot, so the
-        correction bakes into the cache entry. Pre-``bake_avgdl`` indexes
-        fall back to the uncorrected bound."""
+        The cached bound is ``block_bounds.drift_corrected`` (see its
+        docstring for the monotonicity proof and the NaN rule of a
+        mixed-format index). The reader's avgdl is a constant of the open
+        snapshot, so the correction bakes into the cache entry."""
         missing = [t for t in terms if t not in self._blk_meta_cache]
         if missing:
             has_bake = "bake_avgdl" in self._blk_ds.schema.names
@@ -817,23 +816,12 @@ class LocalIndexReader:
             tarr = np.asarray(meta["term"].to_pylist(), dtype=object)
             first = meta["first_doc"].to_numpy(zero_copy_only=False)
             mx = meta["max_doc"].to_numpy(zero_copy_only=False)
-            bmp = meta["block_max_partial"].to_numpy(zero_copy_only=False)
-            if has_bake:
-                avgdl_now = float(self.corpus_stats["avgdl"]) or 1.0
-                bake = meta["bake_avgdl"].to_numpy(zero_copy_only=False)
-                # Mixed-format index (segments appended after the format
-                # change next to pre-bake_avgdl ones): old fragments read
-                # as null -> NaN, and np.maximum PROPAGATES NaN — the
-                # poisoned bound would fail every >= comparison and prune
-                # those blocks even at zero drift. Match the Spark twin
-                # (F.greatest skips nulls): unknown bake -> uncorrected
-                # bound, per-block.
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    factor = avgdl_now / bake
-                factor = np.where(
-                    np.isfinite(factor), np.maximum(1.0, factor), 1.0
-                )
-                bmp = bmp * factor
+            bmp = drift_corrected(
+                meta["block_max_partial"].to_numpy(zero_copy_only=False),
+                meta["bake_avgdl"].to_numpy(zero_copy_only=False)
+                if has_bake else None,
+                float(self.corpus_stats["avgdl"]),
+            )
             for t in missing:
                 m = tarr == t
                 self._blk_meta_cache[t] = (first[m], mx[m], bmp[m])
@@ -860,27 +848,21 @@ class LocalIndexReader:
         conjunctive: bool = False,
         allowed_ids: Optional[Iterable[int]] = None,
         with_results: bool = False,
-        seed_blocks: int = 4,
     ) -> pd.DataFrame:
         """Block-Max WAND top-k ≡ :meth:`search_bm25` (rank- and
         score-identical, pytest-gated) that reads only the posting BLOCKS
         that can matter instead of the query terms' full posting lists —
         the cold-mode (beyond-node-RAM) serving shape at 10^12 turns,
         where a head term's sliver is GBs but its surviving blocks are
-        KBs. Same bound algebra as the Spark path (operators/wand.py,
-        Ding & Suel SIGIR'11):
+        KBs. The plan — block bounds, θ seed, global and range bounds,
+        fallback — is ``operators.block_bounds.WandPlanner``, the same
+        planner the Spark path runs on its driver:
 
         1. read per-block METADATA only (term, first_doc, max_doc,
            block_max_partial — no array columns) for the query terms;
-        2. θ seed: decode each term's top ``seed_blocks`` blocks by block
-           upper bound, fold exact contributions per doc; the k-th best
-           PARTIAL sum is a valid lower bound of the k-th best total
-           (partial ≤ total pointwise), filter-aware: seeds are masked by
-           ``allowed_ids``/tombstones first, and under ``conjunctive``
-           only docs seen with ALL terms in the seed may set θ;
-        3. prune: a block of term t survives iff
-           ``ub_block + Σ_{t'≠t} max_ub(t') ≥ θ``;
-        4. candidates = docs decoded from surviving blocks; exact
+        2. decode the planner's seed blocks, masked by ``allowed_ids`` /
+           tombstones, and let it set θ and the surviving blocks;
+        3. candidates = docs decoded from surviving blocks; exact
            rescoring additionally decodes each term's blocks whose
            [first_doc, max_doc] range intersects the candidates, then
            folds the SAME expression in the SAME sorted-term order as
@@ -903,11 +885,7 @@ class LocalIndexReader:
                 columns=BM25_RESULT_COLUMNS if with_results else BM25_COLUMNS
             )
 
-        self.last_wand_stats = {
-            "terms": 0, "blocks_total": 0, "surviving_blocks": 0,
-            "global_surviving_blocks": 0, "blocks_read": 0,
-            "candidates": 0, "theta": 0.0, "fallback": None,
-        }
+        self.last_wand_stats = empty_stats()
         if not terms:
             return empty()
         # adaptive exhaustive fallback, cached per query shape: when a
@@ -927,131 +905,48 @@ class LocalIndexReader:
                 text, k=k, conjunctive=conjunctive,
                 with_results=with_results,
             )
-        k1, b = self.config.bm25_k1, self.config.bm25_b
         n = float(self.corpus_stats["n_docs"])
-        avgdl = float(self.corpus_stats["avgdl"]) or 1.0
-        idf = {
-            t: math.log(1.0 + (n - d + 0.5) / (d + 0.5))
+        idfs = {
+            t: idf(n, d)
             for t in terms
             if (d := self._df_map.get(t)) is not None
         }
-        if not idf:
+        if not idfs:
             return empty()
-        m_terms, m_first, m_max, m_bmp = self._block_meta(sorted(idf))
-        m_idf = np.fromiter(
-            (idf[t] for t in m_terms), dtype="float64", count=len(m_terms)
+        planner = WandPlanner(
+            terms, idfs, self.config.bm25_k1, self.config.bm25_b,
+            float(self.corpus_stats["avgdl"]) or 1.0,
+            *self._block_meta(sorted(idfs)),
         )
-        m_ub = m_idf * (k1 + 1.0) * m_bmp
-        if len(m_ub) == 0:
+        if planner.empty(conjunctive):
             return empty()
-        scorable = sorted({*m_terms})
-        if conjunctive and len(scorable) < len(terms):
-            return empty()  # same as search_bm25: count can never reach
-        g_ub = {t: 0.0 for t in scorable}
-        for t, u in zip(m_terms, m_ub):
-            if u > g_ub[t]:
-                g_ub[t] = u
-        sum_ub = sum(g_ub.values())
         allowed = self._as_id_array(allowed_ids)
-
-        def fold(arrays: dict, restrict: Optional[np.ndarray]):
-            """Per-doc (score, term-count) fold over term -> (ids,tf,dl),
-            summed in sorted-term order — bit-compatible with
-            search_bm25's chunk fold. ``restrict``: sorted candidate ids
-            to score (None = every decoded doc)."""
-            if restrict is None:
-                restrict = np.unique(np.concatenate(
-                    [a[0] for a in arrays.values()]
-                )) if arrays else np.empty(0, dtype="int64")
-            acc = np.zeros(len(restrict))
-            cnt = np.zeros(len(restrict), dtype="int64")
-            for t in sorted(arrays):
-                ids, tf, dl = arrays[t]
-                sc = idf[t] * tf * (k1 + 1.0) / (
-                    tf + k1 * (1.0 - b + b * dl / avgdl)
-                )
-                pos = np.searchsorted(restrict, ids)
-                np.clip(pos, 0, max(len(restrict) - 1, 0), out=pos)
-                hit = (
-                    restrict[pos] == ids
-                    if len(restrict) else np.zeros(len(ids), dtype=bool)
-                )
-                np.add.at(acc, pos[hit], sc[hit])
-                np.add.at(cnt, pos[hit], 1)
-            return restrict, acc, cnt
-
-        # -- θ seed (step 2) --------------------------------------------------
-        order = np.lexsort((m_first, -m_ub))
-        seed_keys: set = set()
-        taken: dict[str, int] = {}
-        for i in order:
-            t = m_terms[i]
-            if taken.get(t, 0) < seed_blocks:
-                seed_keys.add((t, int(m_first[i])))
-                taken[t] = taken.get(t, 0) + 1
-        seed_arrays = self._read_block_postings(seed_keys)
-        seed_arrays = self._filter_live(seed_arrays, allowed)
-        theta = 0.0
-        if seed_arrays:
-            _, s_acc, s_cnt = fold(seed_arrays, None)
-            elig = (
-                s_acc[s_cnt == len(terms)] if conjunctive else s_acc
-            )
-            if len(elig) >= k:
-                theta = float(np.partition(elig, -k)[-k])
-
-        # -- prune + candidate blocks (steps 3-4) -------------------------------
-        bound = m_ub + np.fromiter(
-            ((sum_ub - g_ub[t]) for t in m_terms),
-            dtype="float64", count=len(m_terms),
+        seed_keys = planner.seed_keys()
+        planner.plan(
+            self._filter_live(self._read_block_postings(seed_keys), allowed),
+            k, conjunctive,
         )
-        # fp-guarded θ: a bound that mathematically equals θ can land a
-        # few ULPs below it (different multiplication order than the
-        # exact fold) — see operators.wand.theta_guard
-        from ..operators.wand import theta_guard
-        theta_cmp = theta_guard(theta)
-        surv = bound >= theta_cmp if theta > 0.0 else np.ones(
-            len(m_ub), dtype=bool
-        )
-        global_surv = int(surv.sum())
-        if theta > 0.0 and len(scorable) > 1 and surv.any():
-            surv &= self._range_refine(
-                scorable, m_terms, m_first, m_max, m_ub, theta, surv
-            )
-        if surv.all():
-            # adaptive fallback: θ cannot beat ANY block bound (even
-            # range-refined), so pruning would read every block anyway —
-            # decode-all + restricted rescore is strictly more work than
-            # the exhaustive fold over the same postings. Answer
-            # exhaustively (identical results, pytest-gated) and cache
-            # the shape so repeat probes skip the metadata/seed work.
+        self.last_wand_stats = planner.stats()
+        if planner.fallback:
+            # θ cannot beat ANY block bound (even range-refined), so
+            # pruning would read every block anyway — decode-all +
+            # restricted rescore is strictly more work than the
+            # exhaustive fold over the same postings. Answer exhaustively
+            # (identical results, pytest-gated) and cache the shape so
+            # repeat probes skip the metadata/seed work.
             if allowed_ids is None:
                 self._wand_plan_cache[plan_key] = True
                 while len(self._wand_plan_cache) > WAND_PLAN_CACHE_SHAPES:
                     self._wand_plan_cache.popitem(last=False)
-            self.last_wand_stats.update(
-                terms=len(scorable), blocks_total=int(len(m_ub)),
-                surviving_blocks=int(len(m_ub)),
-                global_surviving_blocks=global_surv,
-                blocks_read=len(seed_keys), theta=theta,
-                fallback="exhaustive",
-            )
             return self.search_bm25(
                 text, k=k, conjunctive=conjunctive,
                 allowed_ids=allowed_ids, with_results=with_results,
             )
-        surv_keys = {
-            (m_terms[i], int(m_first[i])) for i in np.flatnonzero(surv)
-        }
-        surv_arrays = self._read_block_postings(surv_keys)
-        surv_arrays = self._filter_live(surv_arrays, allowed)
+        surv_keys = planner.surviving_keys()
+        surv_arrays = self._filter_live(
+            self._read_block_postings(surv_keys), allowed
+        )
         if not surv_arrays:
-            self.last_wand_stats.update(
-                terms=len(scorable), blocks_total=int(len(m_ub)),
-                surviving_blocks=int(surv.sum()),
-                global_surviving_blocks=global_surv,
-                blocks_read=len(seed_keys | surv_keys), theta=theta,
-            )
             return empty()
         cand = np.unique(np.concatenate(
             [a[0] for a in surv_arrays.values()]
@@ -1059,12 +954,11 @@ class LocalIndexReader:
         # exact rescoring needs every term's contribution for the
         # candidates — pull in the candidate-overlapping blocks the
         # bound pruned (range test via two searchsorted passes)
-        lo = np.searchsorted(cand, m_first, side="left")
-        hi = np.searchsorted(cand, m_max, side="right")
-        overlap = hi > lo
-        need_keys = {
-            (m_terms[i], int(m_first[i]))
-            for i in np.flatnonzero(overlap | surv)
+        lo = np.searchsorted(cand, planner.m_first, side="left")
+        hi = np.searchsorted(cand, planner.m_max, side="right")
+        need_keys = surv_keys | {
+            (planner.m_terms[i], int(planner.m_first[i]))
+            for i in np.flatnonzero(hi > lo)
         }
         extra = need_keys - surv_keys
         if extra:
@@ -1081,17 +975,13 @@ class LocalIndexReader:
                     )
                 else:
                     surv_arrays[t] = (ids, tf, dl)
-        cand, acc, cnt = fold(surv_arrays, cand)
+        cand, acc, cnt = planner.fold(surv_arrays, cand)
         keep = cnt > 0
         if conjunctive:
             keep &= cnt == len(terms)
         cand, acc, cnt = cand[keep], acc[keep], cnt[keep]
         self.last_wand_stats.update(
-            terms=len(scorable), blocks_total=int(len(m_ub)),
-            surviving_blocks=int(surv.sum()),
-            global_surviving_blocks=global_surv,
-            blocks_read=len(seed_keys | need_keys),
-            candidates=int(len(cand)), theta=theta,
+            blocks_read=len(seed_keys | need_keys), candidates=int(len(cand)),
         )
         top = np.lexsort((cand, -acc))[:k]
         out = pd.DataFrame({
@@ -1102,59 +992,6 @@ class LocalIndexReader:
         if not with_results:
             return out
         return self._render_bm25(out, words, quotes)
-
-    @staticmethod
-    def _range_refine(
-        scorable: list,
-        m_terms: list,
-        m_first: np.ndarray,
-        m_max: np.ndarray,
-        m_ub: np.ndarray,
-        theta: float,
-        surv: np.ndarray,
-    ) -> np.ndarray:
-        """Range-aware (true Block-Max) tightening of the global bound,
-        the numpy twin of operators/wand.py's ``_range_refine``: the
-        doc-id space is cut into a fixed ≤4096-bucket grid (span from the
-        OBSERVED doc-id high-water mark, so sparse id spaces never
-        overflow the grid); each term's per-bucket max block ub replaces
-        the corpus-global ``max_ub(t')`` in the Σ-other bound, so a head
-        term's block in a doc range where the tail term NEVER occurs gets
-        other-ub 0 and dies — the shape where the global bound provably
-        prunes nothing. Never looser than the global bound
-        (bucket_ub ≤ global_ub pointwise). Returns a keep-mask to AND
-        into ``surv``."""
-        from ..operators.wand import WAND_RANGE_GRID, theta_guard
-
-        grid = WAND_RANGE_GRID
-        span = max(1, int(int(m_max.max()) // grid + 1))
-        g1 = np.minimum(m_first // span, grid - 1).astype("int64")
-        g2 = np.minimum(m_max // span, grid - 1).astype("int64")
-        tid_of = {t: j for j, t in enumerate(scorable)}
-        m_tid = np.fromiter(
-            (tid_of[t] for t in m_terms), dtype="int64",
-            count=len(m_terms),
-        )
-        B = np.zeros((len(scorable), grid))
-        single = g1 == g2
-        np.maximum.at(B, (m_tid[single], g1[single]), m_ub[single])
-        for i in np.flatnonzero(~single):
-            seg = B[m_tid[i], g1[i]:g2[i] + 1]
-            np.maximum(seg, m_ub[i], out=seg)
-        tot = B.sum(axis=0)
-        theta_cmp = theta_guard(theta)  # fp-guarded, see operators.wand
-        keep = np.ones(len(m_ub), dtype=bool)
-        check = surv & single
-        keep[check] = (
-            m_ub[check]
-            + tot[g1[check]] - B[m_tid[check], g1[check]]
-        ) >= theta_cmp
-        for i in np.flatnonzero(surv & ~single):
-            other = (
-                tot[g1[i]:g2[i] + 1] - B[m_tid[i], g1[i]:g2[i] + 1]
-            )
-            keep[i] = m_ub[i] + float(other.max()) >= theta_cmp
-        return keep
 
     def _filter_live(
         self, arrays: dict, allowed: Optional[np.ndarray]

@@ -31,7 +31,7 @@ from search_engine_spark.functions.tokenizer import is_stop_word, tokenize
 from search_engine_spark.operators.compaction import compact_index
 from search_engine_spark.operators.deletes import delete_docs
 from search_engine_spark.operators.search import SearchEngine
-from search_engine_spark.operators.wand import wand_topk
+from search_engine_spark.operators.wand import wand_prune_stats, wand_topk
 from search_engine_spark.serving.local import LocalIndexReader
 
 CFG = EngineConfig(score_weights=ScoreWeights())
@@ -546,7 +546,9 @@ def test_skewed_corpus_wand_fuzz(spark, tmp_path_factory):
     exhaustive BM25 on BOTH WAND paths (Spark + serve tier), match the
     from-raw-text model, and at least one query must demonstrably prune
     (surviving_blocks < blocks_total) — losslessness is not bought back
-    by reading everything."""
+    by reading everything. Both paths run one planner
+    (operators/block_bounds.py), so they must report the same plan: θ,
+    blocks total and blocks surviving."""
     rng = random.Random(SEED + 60)
     heads = ["alpha", "beta", "gamma"]
     tails = [f"t{n}" for n in range(300)]
@@ -588,6 +590,9 @@ def test_skewed_corpus_wand_fuzz(spark, tmp_path_factory):
         s = reader.last_wand_stats
         if s["surviving_blocks"] < s["blocks_total"]:
             pruned_any += 1
+        plan = wand_prune_stats(engine, q, k=10)
+        for key in ("theta", "blocks_total", "surviving_blocks"):
+            assert plan[key] == s[key], (q, key, plan, s)
         for d, score, _n in wand:
             assert score == pytest.approx(want[d][0], rel=1e-9), (q, d)
         sp = wand_topk(engine, q, k=10).collect()

@@ -202,23 +202,6 @@ def test_bm25_many_with_results_matches_single(
         assert got == want, text
 
 
-def test_wand_incremental_theta_evidence(engine):
-    """The θ schedule scores each doc at most once across rounds: round
-    r's newly_scored_docs can never exceed its decoded_ids, and the
-    TOTAL scored rows is bounded by distinct decoded ids (the old
-    formulation re-scored the whole pool, making total scored ≈
-    Σ_r r·seed_docs)."""
-    from search_engine_spark.operators.wand import wand_prune_stats
-
-    stats = wand_prune_stats(
-        engine, "filter join window", k=10, theta_rounds=3
-    )
-    assert stats["rounds"]
-    for rnd in stats["rounds"]:
-        if "newly_scored_docs" in rnd:
-            assert rnd["newly_scored_docs"] <= rnd["decoded_ids"]
-
-
 # ---- round-4 review regressions ------------------------------------------
 
 
@@ -240,7 +223,7 @@ def test_batch_single_n_terms_schema_union(engine):
 
 def test_allowed_ids_cached_and_invalidated(warm_engine):
     """_allowed_ids persists + reuses the (doc_id) frame per predicate
-    (WAND θ rounds and repeated filtered queries stop re-scanning docs)
+    (the WAND seed and repeated filtered queries stop re-scanning docs)
     and re-warm drops the cache with the old snapshot."""
     pred = "title = 'user:'"
     a1 = warm_engine._allowed_ids(pred)

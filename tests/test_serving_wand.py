@@ -247,12 +247,13 @@ def test_serve_wand_on_mixed_format_index(spark, tmp_path):
     """A segment written before the bake_avgdl column (mixed-format
     index: pre-change segments next to post-change appends) must not
     poison pruning — pyarrow fills the missing column with null -> NaN,
-    and np.maximum propagates NaN, so before the finite-guard in
-    _block_meta those blocks' bounds went NaN and they were pruned even
-    at ZERO drift, silently dropping their docs from top-k. The reader
-    must stay bitwise-equal to exhaustive BM25 with per-block fallback
-    to the uncorrected bound, and the Spark WAND path must match its
-    exact scorer on the same mixed index (F.greatest's null-skip)."""
+    and np.maximum propagates NaN, so before the finite-guard (now
+    block_bounds.drift_corrected) those blocks' bounds went NaN and they
+    were pruned even at ZERO drift, silently dropping their docs from
+    top-k. The reader must stay bitwise-equal to exhaustive BM25 with
+    per-block fallback to the uncorrected bound, and the Spark WAND path,
+    whose driver-side plan collects the nulls as NaN and applies the same
+    rule, must match its exact scorer on the same mixed index."""
     import glob
     import os
 

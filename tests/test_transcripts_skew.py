@@ -86,13 +86,10 @@ def test_wand_lossless_and_no_looser_on_skewed_corpus(skewed_engine, query):
 
     exact = rows(skewed_engine.search_bm25(query, k=10))
     assert rows(wand_topk(skewed_engine, query, k=10)) == exact
-    assert rows(
-        wand_topk(skewed_engine, query, k=10, range_aware=False)
-    ) == exact
 
     stats = wand_prune_stats(skewed_engine, query, k=10)
-    for r in stats["rounds"]:
-        assert r["pruned_fraction"] >= r["global_pruned_fraction"], stats
+    assert stats["surviving_blocks"] <= stats["global_surviving_blocks"], \
+        stats
 
 
 def test_tail_stride_one_is_identity(spark):

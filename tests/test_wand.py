@@ -63,9 +63,9 @@ def test_wand_empty_query(corpus_engine):
 
 
 def test_wand_warm_parity(spark, tmp_path_factory):
-    """wand_topk must return identical rows on a warmed engine, where the
-    per-term df / block-max maps are driver-pinned and step 1 runs no
-    Spark job at all (warm() extension, round 2)."""
+    """wand_topk must return identical rows on a warmed engine, where df
+    comes from the driver-pinned vocabulary and the block metadata from
+    the pinned blocks table."""
     cfg = EngineConfig(stop_words=DEMO_STOP_WORDS)
     idx = tmp_path_factory.mktemp("wand_warm_idx")
     tx = synthesize_transcripts(spark, f"{SF_DIR}/documents.parquet")
@@ -77,7 +77,6 @@ def test_wand_warm_parity(spark, tmp_path_factory):
         q: rows(eng.search_bm25(q, k=10, use_wand=True)) for q in QUERIES
     }
     eng.warm(pin_docs=False)
-    assert eng._block_max_map, "warm() should pin the block-max map"
     for q in QUERIES:
         assert rows(eng.search_bm25(q, k=10, use_wand=True)) == cold[q], q
 
@@ -89,7 +88,8 @@ def test_wand_driver_entry_answers_through_engine_wand(spark, monkeypatch):
     the driver checks. On this 500-doc corpus the entry's query prunes
     no block of the single-partition layout (θ cannot beat any block
     bound, so WAND falls back to the exhaustive plan); pruning strength
-    is gated above (θ rounds, range-aware) and in test_serving_wand.py."""
+    is gated by the range-bound tests below and in
+    test_serving_wand.py."""
     from pyspark.sql import functions as F
 
     from search_engine_spark.operators import engine_queries, wand
@@ -131,47 +131,23 @@ def test_unbounded_k_is_clamped_to_spark_limit(corpus_engine, use_wand):
     ) == rows(corpus_engine.search_bm25(q, k=n, use_wand=use_wand))
 
 
-def test_wand_theta_rounds_equal_results_more_pruning(corpus_engine):
-    """Iterative θ tightening: results identical across round counts, and
-    the tightened θ never prunes FEWER blocks than the seed θ."""
-    from search_engine_spark.operators.wand import (
-        wand_prune_stats,
-        wand_topk,
-    )
-
-    q = QUERIES[0]
-    r1 = rows(wand_topk(corpus_engine, q, k=10, theta_rounds=1))
-    r3 = rows(wand_topk(corpus_engine, q, k=10, theta_rounds=3))
-    assert r1 == r3 == rows(corpus_engine.search_bm25(q, k=10))
-
-    stats = wand_prune_stats(corpus_engine, q, k=10, theta_rounds=3)
-    fracs = [r["pruned_fraction"] for r in stats["rounds"]]
-    thetas = [r["theta"] for r in stats["rounds"]]
-    assert fracs == sorted(fracs), stats      # pruning only improves
-    assert thetas == sorted(thetas), stats    # θ non-decreasing
-
-
 @pytest.mark.parametrize("query", QUERIES)
 def test_wand_range_aware_lossless_and_no_looser(corpus_engine, query):
     """The range-aware (true Block-Max) bound must stay rank- and
-    score-identical to both the global-bound path and exhaustive BM25,
-    and can only prune MORE blocks than the global bound, never fewer
-    (the per-bucket other-term maxima are ≤ the corpus-wide maxima the
-    global bound charges)."""
+    score-identical to exhaustive BM25, and can only prune MORE blocks
+    than the global bound, never fewer (the per-bucket other-term maxima
+    are ≤ the corpus-wide maxima the global bound charges)."""
     from search_engine_spark.operators.wand import (
         wand_prune_stats,
         wand_topk,
     )
 
     exact = rows(corpus_engine.search_bm25(query, k=10))
-    assert rows(wand_topk(corpus_engine, query, k=10, range_aware=True)) \
-        == rows(wand_topk(corpus_engine, query, k=10, range_aware=False)) \
-        == exact
+    assert rows(wand_topk(corpus_engine, query, k=10)) == exact
 
     stats = wand_prune_stats(corpus_engine, query, k=10)
-    for r in stats["rounds"]:
-        assert r["surviving_blocks"] <= r["global_surviving_blocks"], stats
-        assert r["pruned_fraction"] >= r["global_pruned_fraction"], stats
+    assert stats["surviving_blocks"] <= stats["global_surviving_blocks"], \
+        stats
 
 
 def test_wand_range_aware_prunes_where_global_cannot(corpus_engine):
@@ -192,9 +168,9 @@ def test_wand_range_aware_prunes_where_global_cannot(corpus_engine):
         corpus_engine.search_bm25(q, k=10)
     )
     stats = wand_prune_stats(corpus_engine, q, k=10)
-    last = stats["rounds"][-1]
-    assert last["pruned_fraction"] > last["global_pruned_fraction"], stats
-    assert last["pruned_fraction"] > 0.0, stats
+    assert stats["surviving_blocks"] < stats["global_surviving_blocks"], \
+        stats
+    assert stats["surviving_blocks"] < stats["blocks_total"], stats
 
 
 def test_wand_lossless_under_avgdl_drift(spark, tmp_path_factory):
@@ -205,11 +181,12 @@ def test_wand_lossless_under_avgdl_drift(spark, tmp_path_factory):
     the baked one (a crash between refresh_stats' stats write and its
     block re-bake, or any stats-ahead-of-blocks skew) makes the raw
     baked bound under-estimate true contributions — without the
-    ``bake_avgdl`` correction (wand.block_max_eff) this exact scenario
+    ``bake_avgdl`` correction (block_bounds.drift_corrected) this exact
+    scenario
     dropped true top-k docs and even returned empty results (repro'd at
     drift ≥ 2x on this corpus shape). The corrected bound must stay
     rank- and score-identical to exhaustive BM25 at every drift factor,
-    in both warmed (pinned-map) and cold paths, while still pruning at
+    in both warmed (pinned blocks) and cold paths, while still pruning at
     zero drift (losslessness not bought back by reading everything)."""
     import json
     import os
@@ -252,7 +229,7 @@ def test_wand_lossless_under_avgdl_drift(spark, tmp_path_factory):
                 ) == exact, (factor, warm, q)
         prune = wand_prune_stats(engine, f"{head} {tail}", k=10)
         if factor == 1.0:
-            assert prune["rounds"][-1]["pruned_fraction"] > 0.0, prune
+            assert prune["surviving_blocks"] < prune["blocks_total"], prune
 
 
 def test_wand_adaptive_fallback_flat_and_skewed(spark, tmp_path):
@@ -280,7 +257,7 @@ def test_wand_adaptive_fallback_flat_and_skewed(spark, tmp_path):
     assert rows(wand_topk(engine, "alpha beta", k=5)) == rows(
         engine.search_bm25("alpha beta", k=5)
     )
-    # warm path exercises the pinned min/cnt maps in the same check
+    # the warm path plans from the pinned vocabulary and blocks
     engine.warm(pin_docs=False)
     assert rows(wand_topk(engine, "alpha beta", k=5)) == rows(
         engine.search_bm25("alpha beta", k=5)
@@ -302,31 +279,10 @@ def test_wand_adaptive_fallback_flat_and_skewed(spark, tmp_path):
     q = f"{dfm[0][0]} {dfm[-1][0]}"
     zst = wand_prune_stats(zengine, q, k=10)
     assert zst["would_fallback"] is False, zst
-    assert zst["rounds"][-1]["pruned_fraction"] > 0, zst
-
-
-def test_wand_partially_warmed_engine_skips_fallback_check(spark, tmp_path):
-    """An engine with the pinned df and block-max maps but without the
-    block min/count maps (a partially warmed engine) cannot run the
-    adaptive-fallback check: WAND must prune as it would without the
-    check and still equal exhaustive BM25, instead of raising KeyError
-    on the missing per-term minimum."""
-    from conftest import build_fixture_engine
-    from search_engine_spark.operators.wand import wand_topk
-
-    flat = [
-        {"url": f"https://flat/{i}", "title": "flat",
-         "text": "alpha beta gamma delta", "rank": i + 1}
-        for i in range(40)
-    ]
-    engine = build_fixture_engine(
-        spark, flat, tmp_path / "partial_idx", config=EngineConfig(
-            block_size=4)
-    )
-    engine.warm(pin_docs=False)
-    assert engine._stats_map and engine._block_max_map
-    engine._block_min_map = None
-    engine._block_cnt_map = None
-    assert rows(wand_topk(engine, "alpha beta", k=5)) == rows(
-        engine.search_bm25("alpha beta", k=5)
-    )
+    assert zst["surviving_blocks"] < zst["blocks_total"], zst
+    # a conjunctive query with a term the index lacks matches nothing,
+    # also where WAND prunes (the exhaustive plan counts every term)
+    q = "filter tail_3 zzznope"
+    assert rows(zengine.search_bm25(
+        q, k=10, conjunctive=True, use_wand=True
+    )) == rows(zengine.search_bm25(q, k=10, conjunctive=True)) == []
