@@ -119,6 +119,17 @@ def empty_stats() -> dict:
     }
 
 
+def _expand(blocks: np.ndarray, g1: np.ndarray, g2: np.ndarray):
+    """One row per (block, bucket) of each block's bucket range
+    ``g1[b]..g2[b]``: the block index, the bucket, and where each
+    block's run starts — a ``np.repeat`` expansion, no per-block loop."""
+    n = g2[blocks] - g1[blocks] + 1
+    start = np.cumsum(n) - n
+    blk = np.repeat(blocks, n)
+    step = np.arange(len(blk)) - np.repeat(start, n)
+    return blk, g1[blk] + step, start
+
+
 class WandPlanner:
     """One query's block-max plan over its terms' block metadata.
 
@@ -137,11 +148,16 @@ class WandPlanner:
         self.m_terms = list(m_terms)
         self.m_first = np.asarray(m_first, dtype="int64")
         self.m_max = np.asarray(m_max, dtype="int64")
-        self.m_ub = np.fromiter(
-            (idf[t] for t in self.m_terms), dtype="float64",
-            count=len(self.m_terms),
-        ) * (k1 + 1.0) * np.asarray(m_bmp, dtype="float64")
         self.scorable = sorted({*self.m_terms})
+        # each block's term as its index in ``scorable``
+        code = {t: j for j, t in enumerate(self.scorable)}
+        self.m_tid = np.fromiter(
+            (code[t] for t in self.m_terms), dtype="int64",
+            count=len(self.m_terms),
+        )
+        self.m_ub = np.array(
+            [idf[t] for t in self.scorable], dtype="float64"
+        )[self.m_tid] * (k1 + 1.0) * np.asarray(m_bmp, dtype="float64")
         self.seed = np.zeros(len(self.m_ub), dtype=bool)
         self.theta = 0.0
         self.surv = np.ones(len(self.m_ub), dtype=bool)
@@ -193,9 +209,11 @@ class WandPlanner:
         return restrict, acc, cnt
 
     def plan(self, seed_arrays: dict, k: int, conjunctive: bool) -> None:
-        """θ from the live seed postings, then the surviving blocks."""
+        """θ from the live seed postings, then the surviving blocks. With
+        ``k <= 0`` no k-th score exists: θ stays 0 and every block
+        survives."""
         self.theta = 0.0
-        if seed_arrays:
+        if seed_arrays and k > 0:
             _, acc, cnt = self.fold(seed_arrays)
             elig = acc[cnt == len(self.terms)] if conjunctive else acc
             if len(elig) >= k:
@@ -220,22 +238,25 @@ class WandPlanner:
         survives. The maxima run over ALL blocks of the query terms, not
         just the global survivors: a globally pruned t'-block can still
         hold d's t' posting. Doc ids above the grid clamp into the top
-        bucket — a max over more blocks is never smaller."""
-        m_terms, m_first, m_max, m_ub = (
-            self.m_terms, self.m_first, self.m_max, self.m_ub
+        bucket — a max over more blocks is never smaller.
+
+        No Python loop runs per block: term codes (:attr:`m_tid`) index
+        the per-term maxima, each block's bucket range is expanded with
+        ``np.repeat`` (:func:`_expand`) and folded into the (term,
+        bucket) maxima with ``np.maximum.at``, and a multi-bucket
+        block's best other-term charge is one ``np.maximum.reduceat``
+        over its run. Work is O(blocks + Σ buckets spanned + |terms| ·
+        grid)."""
+        m_tid, m_first, m_max, m_ub = (
+            self.m_tid, self.m_first, self.m_max, self.m_ub
         )
         if theta <= 0.0:
             return np.ones(len(m_ub), dtype=bool), len(m_ub)
         theta_cmp = theta_guard(theta)
-        g_ub = {t: 0.0 for t in self.scorable}
-        for t, u in zip(m_terms, m_ub):
-            if u > g_ub[t]:
-                g_ub[t] = u
-        sum_ub = sum(g_ub.values())
-        surv = m_ub + np.fromiter(
-            ((sum_ub - g_ub[t]) for t in m_terms),
-            dtype="float64", count=len(m_terms),
-        ) >= theta_cmp
+        g_ub = np.zeros(len(self.scorable))
+        np.fmax.at(g_ub, m_tid, m_ub)
+        sum_ub = sum(g_ub.tolist())  # left to right, in scorable order
+        surv = m_ub + (sum_ub - g_ub[m_tid]) >= theta_cmp
         global_surv = int(surv.sum())
         if len(self.scorable) < 2 or not surv.any():
             return surv, global_surv
@@ -244,25 +265,26 @@ class WandPlanner:
         span = max(1, int(int(m_max.max()) // grid + 1))
         g1 = np.minimum(m_first // span, grid - 1).astype("int64")
         g2 = np.minimum(m_max // span, grid - 1).astype("int64")
-        tid_of = {t: j for j, t in enumerate(self.scorable)}
-        m_tid = np.fromiter(
-            (tid_of[t] for t in m_terms), dtype="int64", count=len(m_terms),
-        )
-        B = np.zeros((len(self.scorable), grid))
-        single = g1 == g2
-        np.maximum.at(B, (m_tid[single], g1[single]), m_ub[single])
-        for i in np.flatnonzero(~single):
-            seg = B[m_tid[i], g1[i]:g2[i] + 1]
-            np.maximum(seg, m_ub[i], out=seg)
-        tot = B.sum(axis=0)
+        # B[t·grid + g]: max bound of term t's blocks covering bucket g
+        # (flat, so np.maximum.at takes its one-index fast path)
+        B = np.zeros(len(self.scorable) * grid)
+        row = m_tid * grid
+        blk, bucket, _ = _expand(np.arange(len(m_ub)), g1, g2)
+        np.maximum.at(B, row[blk] + bucket, m_ub[blk])
+        tot = B.reshape(len(self.scorable), grid).sum(axis=0)
         keep = np.ones(len(m_ub), dtype=bool)
+        single = g1 == g2
         check = surv & single
         keep[check] = (
-            m_ub[check] + tot[g1[check]] - B[m_tid[check], g1[check]]
+            m_ub[check] + tot[g1[check]] - B[row[check] + g1[check]]
         ) >= theta_cmp
-        for i in np.flatnonzero(surv & ~single):
-            other = tot[g1[i]:g2[i] + 1] - B[m_tid[i], g1[i]:g2[i] + 1]
-            keep[i] = m_ub[i] + float(other.max()) >= theta_cmp
+        multi = np.flatnonzero(surv & ~single)
+        if len(multi):
+            blk, bucket, start = _expand(multi, g1, g2)
+            other = tot[bucket] - B[row[blk] + bucket]
+            keep[multi] = (
+                m_ub[multi] + np.maximum.reduceat(other, start) >= theta_cmp
+            )
         return surv & keep, global_surv
 
     @property

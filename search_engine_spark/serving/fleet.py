@@ -40,6 +40,7 @@ from .local import (
     BM25_RESULT_COLUMNS,
     RESULT_COLUMNS,
     LocalIndexReader,
+    check_k,
 )
 
 # tables a shard reads from SHARED storage (symlinked whole): docs and
@@ -232,8 +233,9 @@ class FleetReader:
         allowed_ids: Optional[Iterable[int]] = None,
         with_results: bool = False,
     ) -> pd.DataFrame:
+        check_k(k)
         terms = self._terms_of(text, self.config.stop_words)
-        if not terms:
+        if not terms or k == 0:
             return pd.DataFrame(
                 columns=BM25_RESULT_COLUMNS if with_results
                 else BM25_COLUMNS

@@ -139,6 +139,31 @@ def _intersect_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return a[b[idx] == a]
 
 
+def check_k(k: int) -> None:
+    """A negative k is refused, as Spark's ``limit`` refuses it."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+
+
+def topk_order(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the k best rows by (score desc, doc_id asc) — the
+    first k of ``np.lexsort((ids, -scores))`` without sorting every row.
+
+    ``np.partition`` finds the k-th largest score in O(n); every row
+    scoring at least that much is kept, so rows tied at the cut stay in
+    and the ``lexsort`` over them (k′ ≥ k rows) breaks those ties on
+    doc_id exactly as the full sort would."""
+    n = len(scores)
+    if k <= 0:
+        return np.empty(0, dtype="int64")
+    neg = -scores
+    if k >= n:
+        return np.lexsort((ids, neg))
+    cut = np.partition(neg, k - 1)[k - 1]
+    at = np.flatnonzero(neg <= cut)
+    return at[np.lexsort((ids[at], neg[at]))][:k]
+
+
 def _group_runs(tbl: pa.Table) -> dict:
     """(term → (start, end)) run offsets over a (term, …)-sorted table.
     Vectorized via dictionary codes — no Python loop over rows."""
@@ -605,28 +630,6 @@ class LocalIndexReader:
 
     # -- BM25 (scale path) -------------------------------------------------------
 
-    def _render_bm25(
-        self, out: pd.DataFrame, words: Sequence[str],
-        quotes: Sequence[int],
-    ) -> pd.DataFrame:
-        """(title, introduction, url) projection over <=k ranked BM25
-        rows — shared by search_bm25, wand_topk, and the fleet merge
-        (any node can render: the docs table is shared storage)."""
-        fetched = {
-            doc: (title, url, pwords)
-            for doc, title, url, pwords in self._fetch(
-                out["doc_id"].to_numpy()
-            )
-        }
-        rows = []
-        for r in out.itertuples(index=False):
-            title, url, pwords = fetched[int(r.doc_id)]
-            rows.append((
-                int(r.doc_id), float(r.score), int(r.n_terms), title,
-                construct_introduction(words, quotes, pwords), url,
-            ))
-        return pd.DataFrame(rows, columns=BM25_RESULT_COLUMNS)
-
     def bm25_accumulators(
         self, terms: Sequence[str], arrays: Optional[dict] = None
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -704,9 +707,14 @@ class LocalIndexReader:
         sum folded in sorted-term order, matching the Spark path's
         deterministic aggregate — scores agree to 1 ULP, ranks exactly;
         ties break on ascending doc_id). ``with_results`` appends the
-        (title, introduction, url)
-        projection over the ≤k ranked ids, like
-        ``SearchEngine.search_bm25(with_results=True)``."""
+        (title, introduction, url) projection over the ≤k ranked ids,
+        like ``SearchEngine.search_bm25(with_results=True)``.
+
+        Ranking costs O(matches) plus a sort of the rows scoring at
+        least the k-th best score (:func:`topk_order`), never a sort of
+        every match. ``k < 0`` raises ``ValueError`` (as Spark's
+        ``limit`` does); ``k == 0`` returns the empty frame."""
+        check_k(k)
         words, quotes = tokenize(text)
         terms = sorted({
             w.lower()
@@ -714,7 +722,7 @@ class LocalIndexReader:
             if not is_stop_word(w, self.config.stop_words)
         })
         empty_cols = BM25_RESULT_COLUMNS if with_results else BM25_COLUMNS
-        if not terms:
+        if not terms or k == 0:
             return pd.DataFrame(columns=empty_cols)
         uniq, scores, counts = self.bm25_accumulators(terms, arrays=arrays)
         if len(uniq) == 0:
@@ -726,15 +734,39 @@ class LocalIndexReader:
         if allowed is not None:
             keep &= np.isin(uniq, allowed)
         uniq, scores, counts = uniq[keep], scores[keep], counts[keep]
-        order = np.lexsort((uniq, -scores))[:k]
-        out = pd.DataFrame({
-            "doc_id": uniq[order],
-            "score": scores[order],
-            "n_terms": counts[order].astype("int64"),
-        })
+        top = topk_order(uniq, scores, k)
+        return self._ranked(uniq[top], scores[top], counts[top],
+                            with_results, words, quotes)
+
+    def _ranked(
+        self, ids: np.ndarray, scores: np.ndarray, counts: np.ndarray,
+        with_results: bool, words: Sequence[str], quotes: Sequence[int],
+    ) -> pd.DataFrame:
+        """The one answer frame of a ranked BM25 top-k. ``with_results``
+        adds the (title, introduction, url) projection over its ≤k rows
+        — shared by search_bm25, wand_topk, and so the fleet merge (any
+        node can render: the docs table is shared storage)."""
+        frame = {
+            "doc_id": ids,
+            "score": scores,
+            "n_terms": counts.astype("int64"),
+        }
         if not with_results:
-            return out
-        return self._render_bm25(out, words, quotes)
+            return pd.DataFrame(frame)
+        if len(ids) == 0:
+            return pd.DataFrame(columns=BM25_RESULT_COLUMNS)
+        fetched = {
+            doc: (title, url, pwords)
+            for doc, title, url, pwords in self._fetch(ids)
+        }
+        titles, intros, urls = [], [], []
+        for doc in ids.tolist():
+            title, url, pwords = fetched[doc]
+            titles.append(title)
+            intros.append(construct_introduction(words, quotes, pwords))
+            urls.append(url)
+        frame.update(title=titles, introduction=intros, url=urls)
+        return pd.DataFrame(frame)
 
     # -- Block-Max WAND (cold-mode scale path) ---------------------------------
 
@@ -869,10 +901,16 @@ class LocalIndexReader:
            :meth:`search_bm25` — blocks carry raw (tf, dl), so the score
            is computed against CURRENT corpus stats, not baked ones.
 
+        The candidates are ranked by :func:`topk_order` (O(candidates)
+        selection, then a sort of the rows tied at or above the k-th best
+        score). ``k < 0`` raises ``ValueError``; ``k == 0`` returns the
+        empty frame before any planning.
+
         Diagnostics land in ``self.last_wand_stats`` (blocks_total /
         surviving / read / candidates / theta) — the bench's evidence
         that pruning holds at serve time.
         """
+        check_k(k)
         words, quotes = tokenize(text)
         terms = sorted({
             w.lower()
@@ -886,7 +924,7 @@ class LocalIndexReader:
             )
 
         self.last_wand_stats = empty_stats()
-        if not terms:
+        if not terms or k == 0:
             return empty()
         # adaptive exhaustive fallback, cached per query shape: when a
         # previous run of this (terms, conjunctive, k) shape proved that
@@ -983,15 +1021,9 @@ class LocalIndexReader:
         self.last_wand_stats.update(
             blocks_read=len(seed_keys | need_keys), candidates=int(len(cand)),
         )
-        top = np.lexsort((cand, -acc))[:k]
-        out = pd.DataFrame({
-            "doc_id": cand[top],
-            "score": acc[top],
-            "n_terms": cnt[top].astype("int64"),
-        })
-        if not with_results:
-            return out
-        return self._render_bm25(out, words, quotes)
+        top = topk_order(cand, acc, k)
+        return self._ranked(cand[top], acc[top], cnt[top],
+                            with_results, words, quotes)
 
     def _filter_live(
         self, arrays: dict, allowed: Optional[np.ndarray]

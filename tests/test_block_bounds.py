@@ -107,3 +107,81 @@ def test_nan_bake_avgdl_keeps_the_uncorrected_bound():
     # never below the baked bound; zero bake: uncorrected
     assert got.tolist() == [0.5, 1.0, 0.5, 0.5]
     assert drift_corrected(bmp, None, 4.0).tolist() == bmp.tolist()
+
+
+def _reference_survivors(p, theta):
+    """``survivors`` from its docstring, one block at a time: global
+    bound ``ub + Σ_{t'≠t} max_ub(t') ≥ θ``; for two or more terms also
+    ``ub + max_{g ∈ block's buckets} Σ_{t'≠t} bucketmax[t', g] ≥ θ``,
+    the grid spanning the observed max doc id."""
+    theta_cmp = theta_guard(theta)
+    ub = p.m_ub.tolist()
+    terms = p.m_terms
+    n = len(ub)
+    if theta <= 0.0:
+        return [True] * n, n
+    g_ub = {t: max(u for u, tt in zip(ub, terms) if tt == t)
+            for t in p.scorable}
+    keep = [
+        ub[i] + sum(g_ub[t] for t in p.scorable if t != terms[i])
+        >= theta_cmp
+        for i in range(n)
+    ]
+    global_surv = sum(keep)
+    if len(p.scorable) < 2:
+        return keep, global_surv
+    grid = WAND_RANGE_GRID
+    span = max(1, int(p.m_max.max()) // grid + 1)
+
+    def buckets(i):
+        lo = min(int(p.m_first[i]) // span, grid - 1)
+        return range(lo, min(int(p.m_max[i]) // span, grid - 1) + 1)
+
+    bucketmax: dict = {}
+    for i in range(n):
+        for g in buckets(i):
+            key = (terms[i], g)
+            bucketmax[key] = max(bucketmax.get(key, 0.0), ub[i])
+    for i in range(n):
+        if keep[i]:
+            charge = max(
+                sum(bucketmax.get((t, g), 0.0)
+                    for t in p.scorable if t != terms[i])
+                for g in buckets(i)
+            )
+            keep[i] = ub[i] + charge >= theta_cmp
+    return keep, global_surv
+
+
+def test_range_bound_matches_per_block_reference():
+    """The vectorised range bound against the per-block reference above,
+    on random metadata mixing single-bucket blocks, blocks spanning many
+    buckets, and doc ids far above the grid. Bounds are dyadic (idf 1 or
+    1/2, k1 + 1 = 2, block maxima in 1/64 steps) so every sum is exact
+    and the two must agree bit for bit."""
+    rng = random.Random(11)
+    pruned_by_range = 0
+    for trial in range(40):
+        terms = ["a", "b", "c", "d"][:rng.randint(1, 4)]
+        top = rng.choice([3000, 10**6, 10**9])
+        blocks = []
+        for t in terms:
+            for _ in range(rng.randint(1, 30)):
+                first = rng.randrange(top)
+                width = rng.choice([0, 1, top // 5000, top // 40, top // 3])
+                blocks.append((t, first, min(top, first + width),
+                               rng.randint(1, 64) / 64))
+        rng.shuffle(blocks)
+        m_terms, first, mx, bmp = zip(*blocks)
+        p = WandPlanner(sorted(terms), {t: rng.choice([1.0, 0.5])
+                                        for t in terms},
+                        1.0, B, AVGDL, m_terms, first, mx, bmp)
+        best = float(p.m_ub.max())
+        for theta in (0.0, best / 2, best, best * 1.5, best * 2,
+                      best * len(terms)):
+            surv, global_surv = p.survivors(theta)
+            want, want_global = _reference_survivors(p, theta)
+            assert surv.tolist() == want, (trial, theta)
+            assert global_surv == want_global, (trial, theta)
+            pruned_by_range += global_surv - int(surv.sum())
+    assert pruned_by_range > 0  # the range bound did prune somewhere

@@ -19,6 +19,9 @@ from search_engine_spark.operators.index_build import build_index
 from search_engine_spark.serving import (
     FleetReader, LocalIndexReader, make_term_shards,
 )
+from search_engine_spark.serving.local import (
+    BM25_COLUMNS, BM25_RESULT_COLUMNS,
+)
 from search_engine_spark.sources.transcripts import (
     corpus_from_transcripts, synthesize_transcripts,
 )
@@ -209,3 +212,32 @@ def test_fleet_count_and_refresh(fleet_env):
     _, single, fleet2, _ = fleet_env
     assert fleet2.count() == single.count()
     assert fleet2.refresh() is False  # nothing changed on disk
+
+
+def rows(frame) -> list[tuple]:
+    return [tuple(r) for r in frame.itertuples(index=False)]
+
+
+def test_fleet_topk_cut_equals_full_ranking_prefix(fleet_env):
+    """The fleet ranks its merged slivers by selection too: every cut,
+    including one that splits tied scores, is the single reader's full
+    ranking's prefix; k < 0 raises and k = 0 is the empty frame."""
+    _, single, fleet2, fleet3 = fleet_env
+    q = "table scan"
+    full = rows(single.search_bm25(q, k=1 << 30))
+    n = len(full)
+    # the replicated transcripts hold identical turns: ties exist
+    cut = next(c for c in range(2, n) if full[c - 1][1] == full[c][1])
+    for k in (0, 1, cut - 1, cut, cut + 1, n - 1, n, n + 1, 1 << 30):
+        for fleet in (fleet2, fleet3):
+            assert rows(fleet.search_bm25(q, k=k)) == full[:k], k
+    got = fleet2.search_bm25(q, k=cut, with_results=True)
+    assert [str(t) for t in got.dtypes] == [
+        "int64", "float64", "int64", "object", "object", "object"]
+    assert [r[:3] for r in rows(got)] == full[:cut]
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        fleet2.search_bm25(q, k=-1)
+    for with_results, cols in ((False, BM25_COLUMNS),
+                               (True, BM25_RESULT_COLUMNS)):
+        out = fleet2.search_bm25(q, k=0, with_results=with_results)
+        assert out.empty and list(out.columns) == cols

@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 from search_engine_spark.config import (
     DEMO_STOP_WORDS, EngineConfig, ScoreWeights,
 )
+from search_engine_spark.operators.block_bounds import empty_stats
 from search_engine_spark.serving import LocalIndexReader
+from search_engine_spark.serving.local import (
+    BM25_COLUMNS, BM25_RESULT_COLUMNS,
+)
 from conftest import build_fixture_engine
 from fixtures_data import CARL_MEMORY, RANK_HABER
 
@@ -221,3 +225,56 @@ def test_refuses_blocks_files_outside_segments(carl, tmp_path):
     shards = make_term_shards(str(copy), str(tmp_path / "shards"), n_shards=1)
     with pytest.raises(ValueError, match="outside seg= directories"):
         FleetReader(shards, config=CFG)
+
+
+BM25_RESULT_DTYPES = ["int64", "float64", "int64", "object", "object",
+                      "object"]
+
+
+def test_topk_cut_equals_full_ranking_prefix(carl):
+    """Top-k by selection (the k-th score by partition, then a sort of
+    the rows at or above it) returns exactly the first k rows of the
+    full ranking, also where tied scores straddle the cut — for
+    search_bm25 and for wand_topk (plain, conjunctive, allowed_ids)."""
+    _, idx = carl
+    reader = LocalIndexReader(idx, config=CFG)
+    q, cut = "en wikipedia", 5
+    full = local_rows(reader.search_bm25(q, k=1 << 30))
+    n = len(full)
+    assert full[cut - 1][1] == full[cut][1]  # a tie straddles the cut
+    ks = [0, 1, cut - 1, cut, cut + 1, n - 1, n, n + 1, 1 << 30]
+    for k in ks:
+        assert local_rows(reader.search_bm25(q, k=k)) == full[:k], k
+    # every doc but the top one and one of the docs tied at the cut
+    allowed = [d for d, _, _ in full if d not in (full[0][0], full[cut][0])]
+    fallbacks = set()
+    for conj, allowed_ids in ((False, None), (True, None), (False, allowed)):
+        want = local_rows(reader.search_bm25(
+            q, k=1 << 30, conjunctive=conj, allowed_ids=allowed_ids))
+        for k in ks:
+            got = local_rows(reader.wand_topk(
+                q, k=k, conjunctive=conj, allowed_ids=allowed_ids))
+            assert got == want[:k], (conj, allowed_ids is not None, k)
+            fallbacks.add(reader.last_wand_stats["fallback"])
+    assert None in fallbacks  # some cuts were ranked from pruned blocks
+    for answer in (reader.search_bm25, reader.wand_topk):
+        for k in (cut, 1 << 30):
+            got = answer(q, k=k, with_results=True)
+            assert [str(t) for t in got.dtypes] == BM25_RESULT_DTYPES
+            assert [r[:3] for r in local_rows(got)] == full[:k], k
+
+
+def test_negative_k_refused_and_zero_k_empty(carl):
+    """k < 0 raises, as Spark's ``limit`` does (the serve tier used to
+    return every row but |k|); k = 0 is the empty frame, and wand_topk
+    returns it before planning."""
+    _, idx = carl
+    reader = LocalIndexReader(idx, config=CFG)
+    for answer in (reader.search_bm25, reader.wand_topk):
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            answer("en wikipedia", k=-1)
+        for with_results, cols in ((False, BM25_COLUMNS),
+                                   (True, BM25_RESULT_COLUMNS)):
+            out = answer("en wikipedia", k=0, with_results=with_results)
+            assert out.empty and list(out.columns) == cols
+    assert reader.last_wand_stats == empty_stats()
